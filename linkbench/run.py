@@ -1,19 +1,18 @@
 """Record-linkage benchmark: one workload, one seed, one JSON result line.
 
-    python3 linkbench/run.py --workload link_batch --seed 1 --seconds 5 --trace 0
+    python3 linkbench/run.py --workload link_batch --seed 1 --seconds 10 --trace 0
 
 Run from the root of a checkout that holds ``record_linkage_spark``.
 The run starts Spark on ``local[<usable cpus>]``, builds the workload's
-inputs from ``--seed`` (``setup_s``), times ops until their summed wall
-time reaches ``--seconds``, checks the outputs untimed, and prints as
-its last stdout line
+inputs from ``--seed`` and runs one untimed warm-up op (``setup_s``),
+times ops until their summed wall time reaches ``--seconds``, checks
+the outputs untimed, and prints as its last stdout line
 
     {"correct": ..., "attempted": ..., "failed": ..., "metrics": {...}}
 
 ``--trace 0`` reports the end-to-end metrics. ``--trace 1`` enables the
-Spark event log, alternates traced and untraced ops in the window, and
-reports the per-layer metrics of the traced ops; the spans go to
-``.bench_out/traces/``. Everything the run writes stays under
+Spark event log, traces every op, and reports the per-layer metrics;
+the spans go to ``.bench_out/traces/``. Everything the run writes stays under
 ``.bench_out/`` in the checkout. The exit code is 1 when a check fails
 and 2 when the checkout has no engine to run.
 """
@@ -34,7 +33,6 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 LAYERS = (
     "checkpoints",
     "rollup",
-    "ground_truth",
     "blocking",
     "scoring",
     "clustering",
@@ -63,7 +61,7 @@ def _configure_env(out: str) -> dict[str, str]:
     os.environ["PYTHONPATH"] = os.pathsep.join(
         p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
     )
-    mem = os.environ["SPARK_DRIVER_MEM"] = _driver_mem()
+    os.environ["SPARK_DRIVER_MEM"] = _driver_mem()
     os.environ["SPARK_GRAFT_CPUS"] = str(len(os.sched_getaffinity(0)))
     os.environ["SPARK_LOCAL_DIRS"] = tmp
     os.environ["TMPDIR"] = tmp
@@ -73,9 +71,7 @@ def _configure_env(out: str) -> dict[str, str]:
         "spark.ui.showConsoleProgress": "false",
         "spark.local.dir": tmp,
         "spark.sql.warehouse.dir": os.path.join(out, "spark-warehouse"),
-        # a fixed-size heap: RSS no longer follows the collector's
-        # run-to-run heap resizing decisions
-        "spark.driver.extraJavaOptions": f"-Xms{mem} -Djava.io.tmpdir={tmp} -XX:-UsePerfData",
+        "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData",
     }
 
 
@@ -107,10 +103,10 @@ def _stop_spark(spark) -> None:
             pass
 
 
-def _layer_metrics(spans: list[dict], traced_ops: list[int]) -> dict[str, dict]:
+def _layer_metrics(spans: list[dict], n_ops: int) -> dict[str, dict]:
     """Per-layer metrics from attributed spans. Times are the median over
-    traced ops of each op's summed spans; counts come from the first
-    traced op, so they repeat exactly for a seed. A layer no op enters
+    timed ops of each op's summed spans; counts come from the first
+    timed op, so they repeat exactly for a seed. A layer no op enters
     reports its set-up and check spans instead (counts from the first),
     and zero if it has none."""
     from spans import task_skew
@@ -142,7 +138,8 @@ def _layer_metrics(spans: list[dict], traced_ops: list[int]) -> dict[str, dict]:
     out = {}
     for layer in LAYERS:
         mine = [s for s in spans if s["name"] == layer]
-        groups = [g for g in ([s for s in mine if s["op"] == i] for i in traced_ops) if g]
+        in_ops = ([s for s in mine if s["phase"] == "op" and s["op"] == i] for i in range(1, n_ops + 1))
+        groups = [g for g in in_ops if g]
         if not groups:
             # one group per set-up or check occurrence, in order
             groups = [[s] for s in mine if s["phase"] != "op"] or [[]]
@@ -176,7 +173,7 @@ def run(workload: str, seed: int, seconds: int, trace: bool) -> tuple[dict, int]
     from record_linkage_spark.session import get_spark
 
     import spans as sp
-    from workloads import WORKLOADS, CheckFailed
+    from workloads import WORKLOADS
 
     t0 = time.perf_counter()
     spark = get_spark(f"linkbench-{workload}", extra_conf=conf)
@@ -184,85 +181,56 @@ def run(workload: str, seed: int, seconds: int, trace: bool) -> tuple[dict, int]
     wl = WORKLOADS[workload](spark, tracer, out, seed)
     errors: list[str] = []
     durations: list[float] = []
-    traced_ops: list[int] = []
-    items = attempted = failed = 0
+    items = failed = 0
+    f1 = None
     try:
         with sp.MemorySampler(os.getpid()) as mem:
             wl.setup()
             setup_s = time.perf_counter() - t0
             print(f"set-up: {setup_s:.1f} s", file=sys.stderr, flush=True)
-            tracer.phase = "op"
-            first_counts = f1 = None
-            untraced: list[float] = []
-            while wl.has_next() and (
-                sum(durations) + sum(untraced) < seconds
-                or (trace and not (durations and untraced))
-            ):
-                op_id = len(durations) + len(untraced) + 1
-                # traced runs alternate: odd ops traced, even ops untraced
-                tracer.enabled = trace and op_id % 2 == 1
-                tracer.op = op_id
-                attempted += 1
-                ok = False
+            while wl.has_next() and sum(durations) < seconds:
+                tracer.phase, tracer.op = "op", len(durations) + 1
+                dt = None
                 t = time.perf_counter()
                 try:
                     n, counts = wl.op()
-                    if first_counts is None:
-                        first_counts = counts
-                    else:
-                        wl.check_op(counts, first_counts)
-                    ok = True
+                    dt = time.perf_counter() - t
+                    # checks run outside the timed op
+                    tracer.phase = "check"
+                    wl.check_op(counts)
+                    if f1 is None:
+                        f1 = wl.quality()
+                    items += n
                 except Exception:
                     failed += 1
                     errors.append(traceback.format_exc())
-                    n = 0
-                dt = time.perf_counter() - t
-                if trace and not tracer.enabled:
-                    untraced.append(dt)
-                else:
-                    durations.append(dt)
-                    items += n
-                    if trace:
-                        traced_ops.append(op_id)
-                if ok and f1 is None:
-                    tracer.phase = "check"
-                    f1 = wl.quality()
-                    tracer.phase = "op"
-            tracer.enabled = trace
-            timed_s = sum(durations)
+                durations.append(dt if dt is not None else time.perf_counter() - t)
             print(f"timed ops: {[round(d, 2) for d in durations]} s", file=sys.stderr)
         tracer.phase = "check"
         try:
             if f1 is not None:
-                wl.final_check(f1, attempted - failed)
-        except CheckFailed:
+                wl.final_check(f1)
+        except Exception:
             errors.append(traceback.format_exc())
     finally:
         _stop_spark(spark)
 
+    op_p50_s = statistics.median(durations)
     if trace:
         jobs, tasks = sp.read_event_log(events)
         sp.attribute_jobs(tracer.spans, jobs, tasks)
-        metrics = _layer_metrics(tracer.spans, traced_ops)
-        traced_p50 = statistics.median(durations)
-        metrics["trace.op_p50_s"] = {"value": traced_p50, "unit": "s"}
-        metrics["trace.overhead_s"] = {
-            "value": traced_p50 - statistics.median(untraced),
-            "unit": "s",
-        }
+        metrics = _layer_metrics(tracer.spans, len(durations))
+        # the tracing overhead is this minus op_p50_s of untraced runs
+        metrics["trace.op_p50_s"] = {"value": op_p50_s, "unit": "s"}
         trace_dir = os.path.join(ROOT, ".bench_out", "traces")
         os.makedirs(trace_dir, exist_ok=True)
         with open(os.path.join(trace_dir, tag + ".json"), "w") as f:
-            json.dump(
-                {"spans": tracer.spans, "traced_op_s": durations, "untraced_op_s": untraced},
-                f,
-                default=str,
-            )
+            json.dump({"spans": tracer.spans, "op_s": durations}, f, default=str)
     else:
         metrics = {
             "setup_s": {"value": setup_s, "unit": "s"},
-            "op_p50_s": {"value": statistics.median(durations), "unit": "s"},
-            "items_per_s": {"value": items / timed_s, "unit": "1/s"},
+            "op_p50_s": {"value": op_p50_s, "unit": "s"},
+            "items_per_s": {"value": items / sum(durations), "unit": "1/s"},
             "pairwise_f1": {"value": f1 or 0.0, "unit": "ratio"},
             "peak_rss_mb": {"value": mem.peak_bytes / 2**20, "unit": "MB"},
         }
@@ -272,7 +240,7 @@ def run(workload: str, seed: int, seconds: int, trace: bool) -> tuple[dict, int]
     correct = not errors
     return {
         "correct": correct,
-        "attempted": attempted,
+        "attempted": len(durations),
         "failed": failed,
         "metrics": metrics,
     }, 0 if correct else 1
