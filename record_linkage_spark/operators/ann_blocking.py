@@ -76,8 +76,9 @@ ANN_BAND_BITS = 8
 # bucket join already follows)
 ANN_BROADCAST_MAX_BYTES = 128 << 20
 # adaptive-banding planner targets (banding_plan): expected records per
-# band-bucket, and the cosine at which the default config's banding
-# recall is held constant as bits-per-band grow with the corpus
+# band-bucket, and the default cosine at which the default config's
+# banding recall is held constant as bits-per-band grow with the corpus
+# (ann_candidate_pairs passes its cosine_threshold instead)
 ANN_TARGET_BUCKET = 200
 ANN_DESIGN_COSINE = 0.90
 # plane-index offset for per-band independent signatures — disjoint from
@@ -126,9 +127,15 @@ def banding_plan(
     if r <= band_bits:
         return band_bits, num_bands, False
     p = math.acos(min(max(design_cosine, -1.0), 1.0)) / math.pi
-    q0 = (1.0 - p) ** band_bits
-    recall0 = 1.0 - (1.0 - q0) ** num_bands
     q = (1.0 - p) ** r
+    if q >= 1.0:
+        # pairs at the design cosine agree on every plane: any band
+        # count holds recall 1
+        return r, num_bands, True
+    q0 = (1.0 - p) ** band_bits
+    # near cosine 1 the legacy recall rounds to 1.0, which no finite band
+    # count reaches: clamp it so the log below stays finite
+    recall0 = min(1.0 - (1.0 - q0) ** num_bands, 1.0 - 1e-12)
     b = max(num_bands, math.ceil(math.log(1.0 - recall0) / math.log(1.0 - q)))
     return r, b, True
 
@@ -220,19 +227,18 @@ def ann_candidate_pairs(
     band_bits: int = ANN_BAND_BITS,
     h_sigmas: float = 2.0,
     broadcast_max_bytes: int = ANN_BROADCAST_MAX_BYTES,
-    adaptive_banding: bool = True,
     target_bucket: int = ANN_TARGET_BUCKET,
 ) -> DataFrame:
     """Generator form: (id_A, id_B, block_key, strategy) candidate pairs
     whose hashed-text vectors clear ``cosine_threshold``, found via the
     banded RHP-LSH bucket self-join (never all pairs).
 
-    ``adaptive_banding`` (default on) sizes the banding to the corpus
-    via :func:`banding_plan`: small corpora reproduce the legacy
-    ``(num_bands, band_bits)`` config bit-for-bit; past
-    ``target_bucket * 2^band_bits`` records, bits-per-band grow with
-    log2(n) (per-band independent plane sets) and the band count grows
-    to hold banding recall constant at the design cosine — the fix for
+    The banding is sized to the corpus by :func:`banding_plan`: small
+    corpora reproduce the legacy ``(num_bands, band_bits)`` config
+    bit-for-bit; past ``target_bucket * 2^band_bits`` records,
+    bits-per-band grow with log2(n) (per-band independent plane sets)
+    and the band count grows to hold banding recall constant at
+    ``cosine_threshold``, the operating threshold — the fix for
     the saturation quadratic the sf1.0 rehearsal measured (70x
     super-linear at 10x the corpus on the fixed 2^8-per-band key
     space). Construction runs ONE count job over the materialized
@@ -269,12 +275,6 @@ def ann_candidate_pairs(
     driver and every executor."""
     import math
 
-    if not adaptive_banding and num_bands * band_bits > min(num_planes, 63):
-        raise ValueError(
-            f"banding reads {num_bands * band_bits} low bits but the "
-            f"signature has only {min(num_planes, 63)}"
-        )
-
     texts = profiles.select(
         F.col(id_col),
         F.concat_ws(" ", *[F.coalesce(F.col(c), F.lit("")) for c in text_cols]).alias(
@@ -293,15 +293,13 @@ def ann_candidate_pairs(
     # one cheap count over the materialized vector table drives BOTH the
     # banding planner and the hydration broadcast gate below
     n_records = vecs.count()
-    if adaptive_banding:
-        band_bits, num_bands, independent = banding_plan(
-            n_records,
-            band_bits=band_bits,
-            num_bands=num_bands,
-            target_bucket=target_bucket,
-        )
-    else:
-        independent = False
+    band_bits, num_bands, independent = banding_plan(
+        n_records,
+        band_bits=band_bits,
+        num_bands=num_bands,
+        design_cosine=cosine_threshold,
+        target_bucket=target_bucket,
+    )
 
     if independent:
         # scale path: per-band INDEPENDENT r-bit signatures (disjoint

@@ -10,6 +10,15 @@ Transcript analogues (profile columns from rollup):
   B2: B1 ∧ last_text_norm[:3] equal ∧ JW(last_text_norm) >= 0.85
       ∧ primary_tool exact
 
+Each strategy is defined once, in ``STRATEGIES`` (key-equality legs,
+JW legs, exact legs) over the key expressions of ``_KEY_EXPRS``, each
+written once over a column suffix. Every blocking form — the two below,
+the stream increment (``incremental_link``) and the compare overlay
+(``plans/compare``) — is built from three helpers: :func:`block_records`
+(the keyed records a join pairs), :func:`key_legs` (key equality over a
+pair table) and :func:`verify_legs` (JW-then-exact legs over a pair
+table).
+
 Two forms, as in the reference (``SURVEY.md §3 E2``):
   * **filter form** — predicate over a labeled pair table (evaluation path,
     ``generate.py:99-106`` — but as one vectorized projection, not
@@ -38,19 +47,24 @@ from record_linkage_spark.config import (
 from record_linkage_spark.functions.similarity import jaro_winkler_pairs
 from record_linkage_spark.operators.skew import salting_plan
 
-# block-key expression builders are thunks: building a Column requires an
-# active SparkSession, so nothing is materialized at import time
+# block-key expressions, each written once over a column suffix: ""
+# reads a profile table, "_A"/"_B" one side of a hydrated pair table.
+# Builders, not Columns: building a Column requires an active
+# SparkSession, so nothing is materialized at import time
 _KEY_EXPRS = {
-    "text_len_bucket": lambda: F.col("text_len_bucket").cast("string"),
-    "first3": lambda: F.substring("first_text_norm", 1, 3),
-    "last3": lambda: F.substring("last_text_norm", 1, 3),
+    "text_len_bucket": lambda s: F.col(f"text_len_bucket{s}").cast("string"),
+    "first3": lambda s: F.substring(f"first_text_norm{s}", 1, 3),
+    "last3": lambda s: F.substring(f"last_text_norm{s}", 1, 3),
     # phonetic key: American Soundex of the first token — classic RL
     # blocking that survives misspellings sharing the leading sound
     # (smith/smyth -> S530) where the first3 prefix key splits them
-    "snd1": lambda: F.soundex(
-        F.regexp_extract("first_text_norm", r"^\S+", 0)
+    "snd1": lambda s: F.soundex(
+        F.regexp_extract(f"first_text_norm{s}", r"^\S+", 0)
     ),
 }
+
+# joins the key values of a record into its block_key
+_KEY_SEP = "\x01"
 
 # (block-equality key names, [(jw_col, threshold)], [exact extra cols])
 STRATEGIES = {
@@ -78,17 +92,60 @@ STRATEGIES = {
 }
 
 
-def required_profile_columns(strategy: str) -> list[str]:
-    if strategy == "ANN":
-        return ["first_text_norm", "last_text_norm"]
+def block_records(
+    profiles: DataFrame, strategy: str
+) -> tuple[DataFrame, list[str], list[str]]:
+    """Block records of a profile table: ``(conv_id, *keys, *payload)``
+    rows, one per profile whose block keys are all non-null and whose
+    joined block_key is not empty, plus the key and payload column names. The payload is what
+    the verify legs read (:func:`verify_legs`, over ``_A``/``_B``
+    copies); a join on the keys pairs records that share a block."""
     spec = STRATEGIES[strategy]
-    cols = {"text_len_bucket", "first_text_norm"}
-    for colname, _ in spec["jw"]:
-        cols.add(colname)
-    cols.update(spec["exact"])
-    if "last3" in spec["equality"]:
-        cols.add("last_text_norm")
-    return sorted(cols)
+    keys = list(spec["equality"])
+    payload = sorted({c for c, _ in spec["jw"]} | set(spec["exact"]))
+    recs = profiles.select(
+        F.col("conv_id"), *[_KEY_EXPRS[k]("").alias(k) for k in keys], *payload
+    ).filter(F.concat_ws(_KEY_SEP, *keys) != "")
+    for k in keys:
+        recs = recs.filter(F.col(k).isNotNull())
+    return recs, keys, payload
+
+
+def key_legs(strategy: str) -> list[Column]:
+    """Block-key equality legs over a hydrated (``_A``/``_B``) pair
+    table: the filter-form twin of the join on :func:`block_records`
+    keys."""
+    legs = []
+    for name in STRATEGIES[strategy]["equality"]:
+        a, b = _KEY_EXPRS[name]("_A"), _KEY_EXPRS[name]("_B")
+        legs.append(a.isNotNull() & a.eqNullSafe(b))
+    return legs
+
+
+def verify_legs(
+    strategy: str, jw_cols: dict[str, Column] | None = None
+) -> list[Column]:
+    """The cascade's verify legs over ``_A``/``_B`` columns, JW legs then
+    exact legs. Apply them after the key legs (or the key join), so the
+    Arrow JW kernel only sees pairs that passed every equality check.
+    ``jw_cols`` maps a JW column name to a precomputed JW score Column
+    to compare instead of calling the kernel again."""
+    spec = STRATEGIES[strategy]
+    jw_cols = jw_cols or {}
+    legs = [
+        (
+            jw_cols[c]
+            if c in jw_cols
+            else jaro_winkler_pairs(F.col(f"{c}_A"), F.col(f"{c}_B"))
+        )
+        >= F.lit(thr)
+        for c, thr in spec["jw"]
+    ]
+    legs += [
+        F.col(f"{c}_A").isNotNull() & (F.col(f"{c}_A") == F.col(f"{c}_B"))
+        for c in spec["exact"]
+    ]
+    return legs
 
 
 def candidate_pairs(
@@ -118,18 +175,7 @@ def candidate_pairs(
         )
 
         return ann_candidate_pairs(profiles)
-    spec = STRATEGIES[strategy]
-    key_exprs = [_KEY_EXPRS[name]().alias(name) for name in spec["equality"]]
-    key_names = list(spec["equality"])
-    payload_cols = sorted(
-        {c for c, _ in spec["jw"]} | set(spec["exact"])
-    )
-
-    recs = profiles.select(F.col("conv_id"), *key_exprs, *payload_cols).filter(
-        F.concat_ws("", *key_names) != ""
-    )
-    for name in key_names:
-        recs = recs.filter(F.col(name).isNotNull())
+    recs, key_names, payload_cols = block_records(profiles, strategy)
 
     # per-key sizes -> planner-driven salt fan-out: the skew planner's
     # proportional rule ceil(share * n_partitions) (operators/skew.py —
@@ -176,22 +222,13 @@ def candidate_pairs(
     a = a.repartition(n_parts, *join_cols)
     b = b.repartition(n_parts, *join_cols)
     pairs = a.join(b, join_cols).filter(F.col("id_A") < F.col("id_B"))
-
-    for colname, thr in spec["jw"]:
-        pairs = pairs.filter(
-            jaro_winkler_pairs(F.col(f"{colname}_A"), F.col(f"{colname}_B"))
-            >= F.lit(thr)
-        )
-    for colname in spec["exact"]:
-        pairs = pairs.filter(
-            F.col(f"{colname}_A").isNotNull()
-            & (F.col(f"{colname}_A") == F.col(f"{colname}_B"))
-        )
+    for leg in verify_legs(strategy):
+        pairs = pairs.filter(leg)
 
     return pairs.select(
         "id_A",
         "id_B",
-        F.concat_ws("", *key_names).alias("block_key"),
+        F.concat_ws(_KEY_SEP, *key_names).alias("block_key"),
         F.lit(strategy).alias("strategy"),
     )
 
@@ -211,49 +248,13 @@ def apply_blocking_filter(
         from record_linkage_spark.operators.ann_blocking import ann_pair_filter
 
         return ann_pair_filter(hydrated_pairs)
-    spec = STRATEGIES[strategy]
+    legs = key_legs(strategy)
+    if not keys_only:
+        legs += verify_legs(strategy)
     pairs = hydrated_pairs
-    for name in spec["equality"]:
-        a, b = _key_pair_cols(name, pairs)
-        pairs = pairs.filter(a.isNotNull() & a.eqNullSafe(b))
-    if keys_only:
-        return pairs
-    for colname, thr in spec["jw"]:
-        pairs = pairs.filter(
-            jaro_winkler_pairs(F.col(f"{colname}_A"), F.col(f"{colname}_B"))
-            >= F.lit(thr)
-        )
-    for colname in spec["exact"]:
-        pairs = pairs.filter(
-            F.col(f"{colname}_A").isNotNull()
-            & (F.col(f"{colname}_A") == F.col(f"{colname}_B"))
-        )
+    for leg in legs:
+        pairs = pairs.filter(leg)
     return pairs
-
-
-def _key_pair_cols(name: str, pairs: DataFrame) -> tuple[Column, Column]:
-    """Block-key equality legs over hydrated pair columns."""
-    if name == "text_len_bucket":
-        return (
-            F.col("text_len_bucket_A").cast("string"),
-            F.col("text_len_bucket_B").cast("string"),
-        )
-    if name == "first3":
-        return (
-            F.substring("first_text_norm_A", 1, 3),
-            F.substring("first_text_norm_B", 1, 3),
-        )
-    if name == "last3":
-        return (
-            F.substring("last_text_norm_A", 1, 3),
-            F.substring("last_text_norm_B", 1, 3),
-        )
-    if name == "snd1":
-        return (
-            F.soundex(F.regexp_extract("first_text_norm_A", r"^\S+", 0)),
-            F.soundex(F.regexp_extract("first_text_norm_B", r"^\S+", 0)),
-        )
-    raise KeyError(name)
 
 
 def blocking_metrics(

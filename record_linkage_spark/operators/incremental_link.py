@@ -8,6 +8,10 @@ blocking cascade, scored with the same feature vector + broadcast model
 weights as the batch path — so an increment run produces exactly the
 edges the full batch run would produce for pairs touching the new ids.
 
+The cascade is not restated here: the block records and verify legs
+come from ``operators/blocking.py``, where each strategy is defined
+once; only the new-vs-(base ∪ new) join is this module's own.
+
 Cost scales with the increment: the base is first reduced by a
 semi-join on the new side's block keys (with Iceberg partition-by-key
 tables that becomes partition pruning at the scan), so only base
@@ -19,11 +23,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from record_linkage_spark.operators.blocking import _KEY_EXPRS, STRATEGIES
+from record_linkage_spark.operators.blocking import block_records, verify_legs
 from record_linkage_spark.operators.classifier import LinearModel, score_pairs
 from record_linkage_spark.operators.features import FEATURE_INPUT_COLS, add_features
 from record_linkage_spark.operators.ground_truth import hydrate_pairs
-from record_linkage_spark.functions.similarity import jaro_winkler_pairs
 
 HYDRATE_COLS = sorted(set(FEATURE_INPUT_COLS) | {"text_len_bucket"})
 
@@ -36,24 +39,14 @@ def increment_candidates(
     """Blocked candidate pairs touching at least one NEW record:
     new-vs-base (both orders collapse to one) plus new-vs-new
     (id_A < id_B). Returns (id_A, id_B) canonically ordered."""
-    spec = STRATEGIES[strategy]
-    key_names = list(spec["equality"])
-    key_exprs = [_KEY_EXPRS[name]().alias(name) for name in key_names]
-    payload = sorted({c for c, _ in spec["jw"]} | set(spec["exact"]))
-
-    def prep(df: DataFrame, is_new: bool) -> DataFrame:
-        out = df.select(F.col("conv_id"), *key_exprs, *payload).filter(
-            F.concat_ws("", *key_names) != ""
-        )
-        for name in key_names:
-            out = out.filter(F.col(name).isNotNull())
-        return out.withColumn("_new", F.lit(is_new))
-
-    new_side = prep(new_profiles, True)
+    new_recs, key_names, payload = block_records(new_profiles, strategy)
+    new_side = new_recs.withColumn("_new", F.lit(True))
     # reduce the base to blocks the increment actually touches
     touched = new_side.select(*key_names).distinct()
-    base_side = prep(base_profiles, False).join(
-        F.broadcast(touched), key_names, "left_semi"
+    base_side = (
+        block_records(base_profiles, strategy)[0]
+        .withColumn("_new", F.lit(False))
+        .join(F.broadcast(touched), key_names, "left_semi")
     )
     all_side = base_side.unionByName(new_side)
 
@@ -74,16 +67,8 @@ def increment_candidates(
             F.col("id_A") != F.col("id_B")
         )
     )
-    for colname, thr in spec["jw"]:
-        pairs = pairs.filter(
-            jaro_winkler_pairs(F.col(f"{colname}_A"), F.col(f"{colname}_B"))
-            >= F.lit(thr)
-        )
-    for colname in spec["exact"]:
-        pairs = pairs.filter(
-            F.col(f"{colname}_A").isNotNull()
-            & (F.col(f"{colname}_A") == F.col(f"{colname}_B"))
-        )
+    for leg in verify_legs(strategy):
+        pairs = pairs.filter(leg)
     return pairs.select(
         F.least("id_A", "id_B").alias("id_A"),
         F.greatest("id_A", "id_B").alias("id_B"),

@@ -188,8 +188,10 @@ def fixed_prediction_report(
     One single-row aggregate job per (strategy, model) cell over the
     shared (caller-materialized) pair table — no per-pair driver work.
     """
+    from functools import reduce
+
     from record_linkage_spark.functions.similarity import jaro_winkler_pairs
-    from record_linkage_spark.operators.blocking import STRATEGIES, _key_pair_cols
+    from record_linkage_spark.operators.blocking import key_legs, verify_legs
 
     df = pairs.withColumn(
         "_jw_first",
@@ -198,21 +200,15 @@ def fixed_prediction_report(
         "_jw_last",
         jaro_winkler_pairs(F.col("last_text_norm_A"), F.col("last_text_norm_B")),
     )
+    # one JW kernel pass per column, shared by every strategy's legs
+    shared_jw = {
+        "first_text_norm": F.col("_jw_first"),
+        "last_text_norm": F.col("_jw_last"),
+    }
 
     def _in_strategy(strategy: str):
-        spec = STRATEGIES[strategy]
-        cond = F.lit(True)
-        for name in spec["equality"]:
-            a, b = _key_pair_cols(name, df)
-            cond = cond & a.isNotNull() & a.eqNullSafe(b)
-        for colname, thr in spec["jw"]:
-            jw = F.col("_jw_first") if colname == "first_text_norm" else F.col("_jw_last")
-            cond = cond & (jw >= F.lit(thr))
-        for colname in spec["exact"]:
-            cond = cond & F.col(f"{colname}_A").isNotNull() & (
-                F.col(f"{colname}_A") == F.col(f"{colname}_B")
-            )
-        return cond
+        legs = key_legs(strategy) + verify_legs(strategy, shared_jw)
+        return reduce(lambda cond, leg: cond & leg, legs, F.lit(True))
 
     out: DataFrame | None = None
     for strategy in strategies:

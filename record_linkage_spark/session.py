@@ -13,6 +13,23 @@ import os
 from pyspark.sql import SparkSession
 
 
+# share of physical memory the Spark driver's JVM heap gets when
+# SPARK_DRIVER_MEM is unset: the JVM's resident size runs past its heap
+# (metaspace, code cache, Arrow and shuffle buffers) and Python workers
+# share the machine, so a heap sized near physical memory gets the
+# process OOM-killed
+DRIVER_MEMORY_SHARE = 0.4
+
+
+def default_driver_memory(phys_bytes: int | None = None) -> str:
+    """Spark driver heap for :func:`get_spark` when ``SPARK_DRIVER_MEM``
+    is unset: ``DRIVER_MEMORY_SHARE`` of physical memory (``phys_bytes``,
+    read from the OS by default), as a JVM size string in MiB."""
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{int(phys_bytes * DRIVER_MEMORY_SHARE) >> 20}m"
+
+
 def get_spark(
     app_name: str = "record_linkage_spark",
     master: str | None = None,
@@ -42,7 +59,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "20000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -461,13 +461,11 @@ def stream_entities(
     PRIOR epoch, so a retried micro-batch overwrites its own snapshot
     instead of compounding (same exactly-once pattern as the other
     sinks; on a warehouse deployment both become Iceberg MERGE on the
-    same key). Only records that appear in match edges enter the
+    same key). With no prior epoch the old state is empty, so the first
+    batch takes the same contraction path as every later one. Only records that appear in match edges enter the
     assignment — the golden table covers LINKED entities; unlinked
     singletons stay in the profile base. Returns the StreamingQuery."""
-    from record_linkage_spark.operators.clustering import (
-        assign_entities,
-        incremental_components,
-    )
+    from record_linkage_spark.operators.clustering import incremental_components
     from record_linkage_spark.operators.survivorship import (
         incremental_golden_records,
         golden_records,
@@ -575,47 +573,36 @@ def stream_entities(
 
         prev = _latest_epoch(assignment_dir, before=epoch_id)
         if prev is None:
-            # first maintenance batch = the scheduled full CC: assign
-            # from the whole currently-valid edge view (the profile
-            # table may already carry updates that invalidate part of
-            # the streamed edge backlog)
-            vedges = current_matches(
-                spark, matches_dir, base_profiles_dir
-            ).select(F.col("id_A").alias("src"), F.col("id_B").alias("dst"))
-            ids = (
-                vedges.select(F.col("src").alias("conv_id"))
-                .unionByName(vedges.select(F.col("dst").alias("conv_id")))
+            # no prior epoch: the old state is empty
+            old_assign = spark.createDataFrame([], "conv_id string, entity_id string")
+            old_golden = golden_records(profiles, old_assign, **fuse)
+        else:
+            old_assign = spark.read.parquet(f"{assignment_dir}/epoch={prev}")
+            old_golden = spark.read.parquet(f"{golden_dir}/epoch={prev}")
+        # 1) fold NEW edges in via contraction (the append path)
+        new_assign = incremental_components(old_assign, edges)
+        # 2) rebuild entities whose members were UPDATED — their old
+        #    edges are retracted, which can split the component; the
+        #    rebuild also drops streamed edges an update already
+        #    invalidated (every such edge touches an updated conversation)
+        if updated is not None and not updated.isEmpty():
+            new_assign = _rebuild_updated(new_assign, updated)
+        new_assign = new_assign.localCheckpoint()
+        touched = touched_entities(old_assign, new_assign)
+        if updated is not None:
+            # content-only updates keep their assignment but must
+            # still re-fuse their entity's golden record
+            touched = (
+                touched.unionByName(
+                    new_assign.join(
+                        updated, "conv_id", "left_semi"
+                    ).select("entity_id")
+                )
                 .distinct()
             )
-            new_assign = assign_entities(ids, vedges).localCheckpoint()
-            golden_new = golden_records(profiles, new_assign, **fuse)
-        else:
-            old_assign = spark.read.parquet(
-                f"{assignment_dir}/epoch={prev}"
-            )
-            # 1) fold NEW edges in via contraction (the append path)
-            new_assign = incremental_components(old_assign, edges)
-            # 2) rebuild entities whose members were UPDATED — their old
-            #    edges are retracted, which can split the component
-            if updated is not None and not updated.isEmpty():
-                new_assign = _rebuild_updated(new_assign, updated)
-            new_assign = new_assign.localCheckpoint()
-            old_golden = spark.read.parquet(f"{golden_dir}/epoch={prev}")
-            touched = touched_entities(old_assign, new_assign)
-            if updated is not None:
-                # content-only updates keep their assignment but must
-                # still re-fuse their entity's golden record
-                touched = (
-                    touched.unionByName(
-                        new_assign.join(
-                            updated, "conv_id", "left_semi"
-                        ).select("entity_id")
-                    )
-                    .distinct()
-                )
-            golden_new = incremental_golden_records(
-                profiles, new_assign, old_golden, touched, **fuse
-            )
+        golden_new = incremental_golden_records(
+            profiles, new_assign, old_golden, touched, **fuse
+        )
         new_assign.write.mode("overwrite").parquet(
             f"{assignment_dir}/epoch={epoch_id}"
         )

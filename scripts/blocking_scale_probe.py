@@ -12,7 +12,7 @@ def timed_best2(fn):
     return out, round(min(t1,t2),3)
 
 spark = get_spark("bprobe", master="local[32]", shuffle_partitions=32)
-from record_linkage_spark.operators.blocking import candidate_pairs, STRATEGIES, _KEY_EXPRS
+from record_linkage_spark.operators.blocking import block_records, candidate_pairs
 from record_linkage_spark.operators.rollup import rollup_conversations
 from record_linkage_spark.synth.transcripts import generate_transcripts, hidden_key_table, transcripts_table
 
@@ -24,10 +24,8 @@ for n_ent in (40_000, 400_000):
     profiles = rollup_conversations(transcripts).localCheckpoint()
     r = {}
     for strat in ("B1", "B2"):
-        spec = STRATEGIES[strat]
-        keys = [_KEY_EXPRS[k]().alias(k) for k in spec["equality"]]
-        sizes = (profiles.select(*keys).na.drop()
-                 .groupBy(*spec["equality"]).count())
+        recs, keys, _ = block_records(profiles, strat)
+        sizes = recs.groupBy(*keys).count()
         agg = sizes.agg(
             F.count("*").alias("n_blocks"),
             F.max("count").alias("max_block"),

@@ -125,15 +125,8 @@ def test_ann_pair_filter_matches_generator_semantics(spark):
 
 
 def test_strategy_dispatch_and_plan(spark):
-    from record_linkage_spark.operators.blocking import (
-        candidate_pairs,
-        required_profile_columns,
-    )
+    from record_linkage_spark.operators.blocking import candidate_pairs
 
-    assert required_profile_columns("ANN") == [
-        "first_text_norm",
-        "last_text_norm",
-    ]
     profiles = _profiles(spark, n_entities=60)
     df = candidate_pairs(profiles, "ANN")
     assert df.columns == ["id_A", "id_B", "block_key", "strategy"]
@@ -218,3 +211,20 @@ def test_ann_adaptive_banding_keeps_recall_and_precision(spark):
     assert ann <= brute
     assert len(brute) > 0
     assert len(ann) / len(brute) >= 0.8
+
+
+def test_ann_banding_planned_at_operating_threshold(spark, monkeypatch):
+    """ann_candidate_pairs sizes its banding for the caller's
+    cosine_threshold, not a fixed design cosine."""
+    from record_linkage_spark.operators import ann_blocking
+
+    seen = []
+    plan = ann_blocking.banding_plan
+
+    def spy(n_records, **kw):
+        seen.append(kw["design_cosine"])
+        return plan(n_records, **kw)
+
+    monkeypatch.setattr(ann_blocking, "banding_plan", spy)
+    ann_candidate_pairs(_profiles(spark, n_entities=20), cosine_threshold=0.85)
+    assert seen == [0.85]

@@ -4,6 +4,7 @@ columns, plus generator-form (salted self-join) invariants."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from record_linkage_spark.operators.blocking import (
@@ -101,9 +102,11 @@ def test_b2_fails_on_tool_mismatch(spark):
     assert apply_blocking_filter(df, "B2").count() == 0
 
 
-def test_candidate_generator_matches_filter_form(spark):
+@pytest.mark.parametrize("strategy", ["B1", "B2", "P1"])
+def test_candidate_generator_matches_filter_form(spark, strategy):
     """Generator-form pairs == filter-form pairs over the full cross join
-    (on a small profile table where O(n^2) is checkable)."""
+    (on a small profile table where O(n^2) is checkable), for every
+    strategy: both forms are built from the same cascade definition."""
     profiles = spark.createDataFrame(
         [
             ("c1", 1, "hello world foo", "bye now", "search", 3),
@@ -111,13 +114,18 @@ def test_candidate_generator_matches_filter_form(spark):
             ("c3", 1, "hello world bar", "bye now", "search", 3),
             ("c4", 2, "hello world foo", "bye now", "search", 3),  # bucket differs
             ("c5", 1, "completely different", "bye", "browser", 3),
+            # P1's phonetic key: smith/smyth share a Soundex code
+            ("a", 2, "smith visits the records office", "x", None, 2),
+            ("b", 2, "smyth visits the records office", "x", None, 2),
+            ("c", 2, "jones visits the records office", "x", None, 2),
+            ("d", 3, "smith visits the records office", "x", None, 2),
         ],
         "conv_id string, text_len_bucket int, first_text_norm string, "
         "last_text_norm string, primary_tool string, n_turns int",
     )
     got = {
         (r.id_A, r.id_B)
-        for r in candidate_pairs(profiles, "B1", salt_target=2).collect()
+        for r in candidate_pairs(profiles, strategy, salt_target=2).collect()
     }
     # cross-check with brute force filter form
     a = profiles.select(
@@ -130,9 +138,14 @@ def test_candidate_generator_matches_filter_form(spark):
     )
     brute = a.crossJoin(b).filter(F.col("id_A") < F.col("id_B"))
     exp = {
-        (r.id_A, r.id_B) for r in apply_blocking_filter(brute, "B1").collect()
+        (r.id_A, r.id_B)
+        for r in apply_blocking_filter(brute, strategy).collect()
     }
     assert got == exp and len(got) > 0
+    # only the phonetic key pairs the typo the first-3-chars key splits
+    assert {p for p in got if p[0] in {"a", "b", "c", "d"}} == (
+        {("a", "b")} if strategy == "P1" else set()
+    )
 
 
 def test_candidate_generator_salting_invariance(spark):
@@ -238,26 +251,6 @@ def test_p1_phonetic_blocks_misspelled_first_token(spark):
     b1 = {(r["id_A"], r["id_B"]) for r in apply_blocking_filter(df, "B1").collect()}
     assert p1 == {("a", "b")}
     assert ("a", "b") not in b1  # the prefix key misses the typo pair
-
-
-def test_p1_generator_matches_filter_form(spark):
-    """The salted generator and the pair-filter form must agree for P1
-    exactly as they do for B1/B2 (shared machinery, new key only)."""
-    profiles = spark.createDataFrame(
-        [
-            ("a", 2, "smith visits the records office", "x", None),
-            ("b", 2, "smyth visits the records office", "x", None),
-            ("c", 2, "jones visits the records office", "x", None),
-            ("d", 3, "smith visits the records office", "x", None),
-        ],
-        "conv_id string, text_len_bucket int, first_text_norm string, "
-        "last_text_norm string, primary_tool string",
-    )
-    gen = {
-        (r["id_A"], r["id_B"])
-        for r in candidate_pairs(profiles, "P1", salt_target=2).collect()
-    }
-    assert gen == {("a", "b")}
 
 
 def test_p1_phonetic_key_actually_gates(spark):

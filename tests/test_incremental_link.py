@@ -1,6 +1,7 @@
 """Incremental linkage: increment run == batch run restricted to pairs
 touching the new ids."""
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -15,7 +16,8 @@ def _profiles(spark, n_entities, dup_rate=1.8):
     return rollup_conversations(transcripts_table(raw)).localCheckpoint()
 
 
-def test_increment_matches_batch_restriction(spark):
+@pytest.mark.parametrize("strategy", ["B1", "B2", "P1"])
+def test_increment_matches_batch_restriction(spark, strategy):
     from record_linkage_spark.operators.blocking import candidate_pairs
     from record_linkage_spark.operators.incremental_link import (
         increment_candidates,
@@ -31,12 +33,12 @@ def test_increment_matches_batch_restriction(spark):
 
     inc = {
         (r.id_A, r.id_B)
-        for r in increment_candidates(new_p, base_p, "B1").collect()
+        for r in increment_candidates(new_p, base_p, strategy).collect()
     }
     new_ids = {r.conv_id for r in new_p.select("conv_id").collect()}
     batch = {
         (min(r.id_A, r.id_B), max(r.id_A, r.id_B))
-        for r in candidate_pairs(profiles, "B1").collect()
+        for r in candidate_pairs(profiles, strategy).collect()
         if r.id_A in new_ids or r.id_B in new_ids
     }
     assert inc == batch

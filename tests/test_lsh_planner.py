@@ -97,3 +97,43 @@ def test_default_832_documented_numbers():
     # numbers quoted in the minhash_near_duplicates docstring
     assert lsh_candidate_probability(0.7, 8, 4) == pytest.approx(0.89, abs=0.005)
     assert lsh_candidate_probability(0.4, 8, 4) == pytest.approx(0.19, abs=0.01)
+
+
+def test_banding_plan_holds_recall_at_the_given_cosine():
+    """The ANN banding planner holds the legacy banding recall at the
+    cosine it is given — ann_candidate_pairs passes its operating
+    threshold, so pairs just above it keep their recall."""
+    from record_linkage_spark.operators.ann_blocking import (
+        ANN_BAND_BITS,
+        ANN_NUM_BANDS,
+        banding_plan,
+    )
+
+    def recall(cos, r, b):
+        p = math.acos(cos) / math.pi
+        return 1 - (1 - (1 - p) ** r) ** b
+
+    for n in (640_000, 10_000_000):
+        legacy = recall(0.80, ANN_BAND_BITS, ANN_NUM_BANDS)
+        r, b, ind = banding_plan(n, design_cosine=0.80)
+        assert ind and recall(0.80, r, b) >= legacy
+        # held at 0.90 instead, the plan loses recall at 0.80
+        r9, b9, _ = banding_plan(n, design_cosine=0.90)
+        assert recall(0.80, r9, b9) < legacy
+        assert b > b9
+
+
+def test_banding_plan_at_cosine_one():
+    """design_cosine >= 1.0 means the design pairs agree on every plane:
+    the plan keeps the legacy band count instead of raising on log(0)."""
+    from record_linkage_spark.operators.ann_blocking import (
+        ANN_NUM_BANDS,
+        banding_plan,
+    )
+
+    for cos in (1.0, 1.5):
+        r, b, ind = banding_plan(640_000, design_cosine=cos)
+        assert ind and r == 12 and b == ANN_NUM_BANDS
+    # just below 1: the legacy recall rounds to 1.0 and is clamped
+    r, b, ind = banding_plan(640_000, design_cosine=1.0 - 1e-15)
+    assert ind and b >= ANN_NUM_BANDS
