@@ -96,16 +96,16 @@ def block_records(
     profiles: DataFrame, strategy: str
 ) -> tuple[DataFrame, list[str], list[str]]:
     """Block records of a profile table: ``(conv_id, *keys, *payload)``
-    rows, one per profile whose block keys are all non-null and whose
-    joined block_key is not empty, plus the key and payload column names. The payload is what
-    the verify legs read (:func:`verify_legs`, over ``_A``/``_B``
-    copies); a join on the keys pairs records that share a block."""
+    rows, one per profile whose block keys are all non-null, plus the
+    key and payload column names. The payload is what the verify legs
+    read (:func:`verify_legs`, over ``_A``/``_B`` copies); a join on the
+    keys pairs records that share a block."""
     spec = STRATEGIES[strategy]
     keys = list(spec["equality"])
     payload = sorted({c for c, _ in spec["jw"]} | set(spec["exact"]))
     recs = profiles.select(
         F.col("conv_id"), *[_KEY_EXPRS[k]("").alias(k) for k in keys], *payload
-    ).filter(F.concat_ws(_KEY_SEP, *keys) != "")
+    )
     for k in keys:
         recs = recs.filter(F.col(k).isNotNull())
     return recs, keys, payload

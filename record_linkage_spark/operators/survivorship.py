@@ -34,6 +34,22 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
+# The fusion rule for conversation profiles: the batch pipeline's
+# golden_records stage and stream_entities both fuse with it.
+CONVERSATION_FUSION = dict(
+    id_col="conv_id",
+    mode_cols=("first_role", "primary_tool"),
+    longest_col="last_text_norm",
+    sum_cols=("n_tokens", "n_turns"),
+)
+# the profile columns that rule reads
+CONVERSATION_FUSION_COLS = [
+    CONVERSATION_FUSION["id_col"],
+    *CONVERSATION_FUSION["mode_cols"],
+    CONVERSATION_FUSION["longest_col"],
+    *CONVERSATION_FUSION["sum_cols"],
+]
+
 
 def golden_records(
     records: DataFrame,

@@ -33,11 +33,12 @@ from record_linkage_spark.operators.classifier import (
 )
 from record_linkage_spark.operators.clustering import assign_entities
 from record_linkage_spark.operators.evaluate import evaluate_global
-from record_linkage_spark.operators.features import FEATURE_INPUT_COLS, add_features
+from record_linkage_spark.operators.features import add_features
 from record_linkage_spark.operators.ground_truth import (
     build_ground_truth,
     hydrate_pairs,
 )
+from record_linkage_spark.operators.incremental_link import HYDRATE_COLS
 from record_linkage_spark.operators.rollup import rollup_conversations
 from record_linkage_spark.sources.checkpoints import Warehouse
 from record_linkage_spark.synth.transcripts import (
@@ -46,7 +47,6 @@ from record_linkage_spark.synth.transcripts import (
     transcripts_table,
 )
 
-HYDRATE_COLS = sorted(set(FEATURE_INPUT_COLS) | {"text_len_bucket"})
 STAGES = [
     "transcripts",
     "hidden_keys",
@@ -319,24 +319,18 @@ class LinkagePipeline:
         # fusion: one canonical record per resolved entity (survivorship
         # rules with deterministic tie-breaks; the warehouse's final
         # user-facing table)
-        from record_linkage_spark.operators.survivorship import golden_records
+        from record_linkage_spark.operators.survivorship import (
+            CONVERSATION_FUSION,
+            CONVERSATION_FUSION_COLS,
+            golden_records,
+        )
 
         golden = wh.run_stage(
             "golden_records",
             lambda: golden_records(
-                profiles.select(
-                    "conv_id",
-                    "first_role",
-                    "primary_tool",
-                    "last_text_norm",
-                    "n_tokens",
-                    "n_turns",
-                ),
+                profiles.select(*CONVERSATION_FUSION_COLS),
                 clusters,
-                id_col="conv_id",
-                mode_cols=("first_role", "primary_tool"),
-                longest_col="last_text_norm",
-                sum_cols=("n_tokens", "n_turns"),
+                **CONVERSATION_FUSION,
             ),
             self._cfg(),
             inputs=["clusters", "profiles"],

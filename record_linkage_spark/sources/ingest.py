@@ -28,6 +28,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from record_linkage_spark.streaming.incremental import (
+    skip_empty,
+    start_foreach_batch,
+    write_epoch,
+)
+
 # TRANSCRIPT_SCHEMA plus the corrupt-record capture column. conv_id /
 # turn_idx are nullable HERE (a malformed line yields nulls; the
 # semantic validator quarantines them) — the clean output re-asserts
@@ -117,18 +123,15 @@ def stream_ingest(
     checkpoint_dir: str,
 ):
     """Streaming JSONL ingest: each micro-batch splits through the same
-    validator and lands as parquet under ``clean_dir/epoch=N`` /
-    ``quarantine_dir/epoch=N`` (epoch-keyed overwrite — retried batches
-    are exactly-once, the discipline every sink in
-    ``streaming/incremental.py`` follows). The clean side is exactly
-    the transcript contract, so ``stream_profiles`` / ``stream_link``
-    consume ``clean_dir`` unchanged: a malformed line can never fail or
-    poison the linkage stream, only land in quarantine with a reason.
+    validator and lands as parquet epochs of ``clean_dir`` /
+    ``quarantine_dir`` (the epoch layout of ``streaming/incremental.py``).
+    The clean side is exactly the transcript contract, so
+    ``stream_profiles`` / ``stream_link`` consume ``clean_dir``
+    unchanged: a malformed line can never fail or poison the linkage
+    stream, only land in quarantine with a reason.
 
     Returns the StreamingQuery (availableNow trigger; caller awaits).
     """
-    import os
-
     stream = (
         spark.readStream.schema(_INGEST_SCHEMA)
         .option("mode", "PERMISSIVE")
@@ -138,23 +141,11 @@ def stream_ingest(
     )
 
     def split_and_write(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         clean, quarantine = split_parsed_transcripts(batch_df)
-        clean.write.mode("overwrite").parquet(
-            os.path.join(clean_dir, f"epoch={epoch_id}")
-        )
-        quarantine.write.mode("overwrite").parquet(
-            os.path.join(quarantine_dir, f"epoch={epoch_id}")
-        )
+        write_epoch(clean, clean_dir, epoch_id)
+        write_epoch(quarantine, quarantine_dir, epoch_id)
 
-    return (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(split_and_write)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(stream, skip_empty(split_and_write), checkpoint_dir)
 
 
 def ingest_report(quarantine: DataFrame) -> DataFrame:

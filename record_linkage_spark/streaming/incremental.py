@@ -8,11 +8,32 @@ a real deployment, becomes a MERGE INTO an Iceberg table; here it is
 an overwrite-by-conv_id parquet upsert). Late/out-of-order turns within a
 watermark are tolerated because the rollup re-aggregates any conv_id seen
 in the batch from the full turn history.
+
+Epoch layout — one decision shared by every stream here and by
+``sources/ingest.stream_ingest``:
+
+- each micro-batch writes its output under ``<table>/epoch=<batch id>``
+  with overwrite (:func:`write_epoch`), so a retried batch replaces its
+  own partial output instead of double-appending (exactly-once
+  ``foreachBatch``); on a warehouse deployment these writes become
+  Iceberg MERGE/append on the same epoch key;
+- seeds and compactions land at the reserved ``epoch=-1``, below every
+  stream epoch, so a fresh stream never overwrites them;
+- readers take the latest epoch of each row (profiles), or the latest
+  snapshot other than the current batch's (entity state), so a retry
+  never reads its own first attempt.
+
+Every stream starts through :func:`start_foreach_batch`: append mode,
+its own checkpoint, ``availableNow`` trigger (drain what has landed,
+then stop). Epoch ids are listed through the Hadoop FileSystem API
+(:func:`epoch_ids`), never driver-local ``os.path``, which silently
+answers for the wrong filesystem on a real cluster.
 """
 
 from __future__ import annotations
 
 import os
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -20,16 +41,54 @@ from pyspark.sql import types as T
 
 from record_linkage_spark.operators.rollup import rollup_conversations
 
+BatchFn = Callable[[DataFrame, int], None]
 
-def _fs_exists(spark: SparkSession, path: str) -> bool:
-    """Existence probe through the Hadoop FileSystem API — works on any
-    configured filesystem (HDFS/S3A/local), unlike driver-local
-    ``os.path.exists`` which silently answers for the wrong filesystem on
-    a real cluster."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
+
+def epoch_ids(spark: SparkSession, table_dir: str) -> list[int] | None:
+    """The epoch ids under ``table_dir``, or None when it does not exist."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(table_dir)
     fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(p))
+    if not fs.exists(p):
+        return None
+    ids = []
+    for st in fs.listStatus(p):
+        key, _, value = st.getPath().getName().partition("=")
+        if key == "epoch":
+            ids.append(int(value))
+    return ids
+
+
+def _epoch_dir(table_dir: str, epoch_id: int) -> str:
+    return os.path.join(table_dir, f"epoch={epoch_id}")
+
+
+def write_epoch(df: DataFrame, table_dir: str, epoch_id: int) -> None:
+    """Write ``df`` as the ``epoch_id`` partition of ``table_dir``,
+    replacing whatever an earlier attempt left there."""
+    df.write.mode("overwrite").parquet(_epoch_dir(table_dir, epoch_id))
+
+
+def skip_empty(process: BatchFn) -> BatchFn:
+    """``process`` for sinks that have nothing to do on an empty batch."""
+
+    def run(batch_df: DataFrame, epoch_id: int) -> None:
+        if not batch_df.isEmpty():
+            process(batch_df, epoch_id)
+
+    return run
+
+
+def start_foreach_batch(source: DataFrame, process: BatchFn, checkpoint_dir: str):
+    """Start ``process`` over every micro-batch of the streaming
+    ``source`` until it has drained what has landed. Returns the
+    StreamingQuery (caller awaits it)."""
+    return (
+        source.writeStream.outputMode("append")
+        .foreachBatch(process)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def _latest_profiles(base: DataFrame) -> DataFrame:
@@ -38,8 +97,6 @@ def _latest_profiles(base: DataFrame) -> DataFrame:
     re-rolled in a later epoch supersedes its older rows. One window
     shuffle per read here; on a warehouse deployment the MERGE keeps the
     table unique per conv_id and this view is a plain scan."""
-    if "epoch" not in base.columns:
-        return base
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("conv_id").orderBy(F.col("epoch").desc())
@@ -69,10 +126,6 @@ def current_matches(
     place and this view is a plain scan."""
     edges = spark.read.parquet(matches_dir)
     base = spark.read.parquet(base_profiles_dir)
-    if "epoch" not in edges.columns or "epoch" not in base.columns:
-        # un-epoched (append-only) layouts have no update provenance —
-        # every edge is current
-        return edges
     lat = base.groupBy("conv_id").agg(F.max("epoch").alias("_lat"))
     la = lat.select(F.col("conv_id").alias("id_A"), F.col("_lat").alias("_lat_a"))
     lb = lat.select(F.col("conv_id").alias("id_B"), F.col("_lat").alias("_lat_b"))
@@ -101,11 +154,9 @@ def compact_state(
     is entirely NULL never pair again, so they only exist to invalidate
     old edges — which compaction does for real by deleting those edges)
     and rewrites the match table to exactly the valid edge view. Both
-    land under the reserved ``epoch=-1`` partition (a fresh stream's own
-    epochs start at 0, so the compacted state is never overwritten) and
-    seed a FRESH deployment with new checkpoints — the blue/green
-    rollover pattern; compacting under a live stream's feet would desync
-    its file-source bookkeeping.
+    land at the reserved ``epoch=-1`` and seed a FRESH deployment with
+    new checkpoints — the blue/green rollover pattern; compacting under
+    a live stream's feet would desync its file-source bookkeeping.
 
     Scale shape: one latest-wins window over the profile table, one
     groupBy for the epoch map, two endpoint joins — each a single pass,
@@ -130,13 +181,9 @@ def compact_state(
         is_tombstone = is_tombstone & (F.coalesce("n_tokens", F.lit(0)) == 0)
     live = latest.filter(~is_tombstone) if text_cols else latest
     n_tomb = latest.count() - live.count()
-    live.drop("epoch").write.mode("overwrite").parquet(
-        f"{out_base_dir}/epoch=-1"
-    )
+    write_epoch(live.drop("epoch"), out_base_dir, -1)
     valid = current_matches(spark, matches_dir, base_profiles_dir)
-    valid.drop("epoch").write.mode("overwrite").parquet(
-        f"{out_matches_dir}/epoch=-1"
-    )
+    write_epoch(valid.drop("epoch"), out_matches_dir, -1)
     out_p = spark.read.parquet(out_base_dir)
     out_m = spark.read.parquet(out_matches_dir)
     return {
@@ -163,15 +210,9 @@ def stream_profiles(
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    history_dir: str | None = None,
 ):
     """Start a streaming query: parquet file source -> per-batch rollup ->
-    profile upsert. Returns the StreamingQuery (caller stops it).
-
-    history_dir: optional directory with previously-seen turns; each batch
-    re-rolls affected conversations from history + batch so partial
-    conversations converge as more turns arrive.
-    """
+    profile upsert. Returns the StreamingQuery."""
     stream = (
         spark.readStream.schema(TRANSCRIPT_SCHEMA)
         .option("maxFilesPerTrigger", 8)
@@ -179,28 +220,9 @@ def stream_profiles(
     )
 
     def upsert(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        turns = batch_df
-        if history_dir and _fs_exists(spark, history_dir):
-            hist = spark.read.schema(TRANSCRIPT_SCHEMA).parquet(history_dir)
-            touched = batch_df.select("conv_id").distinct()
-            turns = (
-                hist.join(touched, "conv_id", "left_semi")
-                .unionByName(batch_df)
-                .dropDuplicates(["conv_id", "turn_idx"])
-            )
-        profiles = rollup_conversations(turns).drop("turns")
-        out = os.path.join(output_dir, f"epoch={epoch_id}")
-        profiles.write.mode("overwrite").parquet(out)
+        write_epoch(rollup_conversations(batch_df).drop("turns"), output_dir, epoch_id)
 
-    return (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(stream, skip_empty(upsert), checkpoint_dir)
 
 
 def windowed_turn_counts(
@@ -251,11 +273,7 @@ def stream_link(
     re-fuses its former entity without it. The ghost profile row stays
     until compaction (an Iceberg MERGE deletes it in place).
 
-    Sinks are idempotent per epoch (``epoch=<id>`` subdirectories written
-    with overwrite); seed an initial profile base under a reserved
-    partition (e.g. ``epoch=-1``) so the directory layout stays
-    consistently partitioned. On a warehouse deployment both writes
-    become Iceberg MERGE/append with the same epoch key."""
+    An initial profile base, if any, is seeded at ``epoch=-1``."""
     from record_linkage_spark.operators.incremental_link import (
         HYDRATE_COLS,
         link_increment,
@@ -268,17 +286,15 @@ def stream_link(
     )
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         new_profiles = rollup_conversations(batch_df).drop("turns").localCheckpoint()
         cols = ["conv_id", *HYDRATE_COLS]
-        if _fs_exists(spark, base_profiles_dir):
-            base = spark.read.parquet(base_profiles_dir)
-            if "epoch" in base.columns:
-                # exclude this epoch's own rows: a retried micro-batch that
-                # crashed after the profile write must not link against
-                # itself (partition pruning makes the exclusion free)
-                base = base.filter(F.col("epoch") != epoch_id)
+        if epoch_ids(spark, base_profiles_dir) is not None:
+            # exclude this epoch's own rows: a retried micro-batch that
+            # crashed after the profile write must not link against
+            # itself (partition pruning makes the exclusion free)
+            base = spark.read.parquet(base_profiles_dir).filter(
+                F.col("epoch") != epoch_id
+            )
             # latest-wins view, minus rows superseded by THIS batch: an
             # updated conversation must link as its new self only — its
             # stale profile would otherwise self-match
@@ -291,20 +307,10 @@ def stream_link(
         edges = link_increment(
             new_profiles.select(*cols), base, model, strategy
         ).filter(F.col("pred") == 1)
-        # epoch-keyed overwrite: retries replace their own partial output
-        # instead of double-appending (exactly-once foreachBatch pattern)
-        edges.write.mode("overwrite").parquet(f"{matches_dir}/epoch={epoch_id}")
-        new_profiles.select(*cols).write.mode("overwrite").parquet(
-            f"{base_profiles_dir}/epoch={epoch_id}"
-        )
+        write_epoch(edges, matches_dir, epoch_id)
+        write_epoch(new_profiles.select(*cols), base_profiles_dir, epoch_id)
 
-    return (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(stream, skip_empty(process), checkpoint_dir)
 
 
 DOC_SCHEMA = T.StructType(
@@ -340,14 +346,9 @@ def stream_dedup(
     batch x touched-buckets regardless of corpus size. Cross-side
     verification is the ``num_hashes``-sample MinHash estimate (exact at
     tau=1.0, see ``minhash_cross_from_bands``); within-batch pairs get
-    exact-Jaccard verification (the batch text is at hand).
-
-    Idempotent sinks: every output lands in an ``epoch=<id>``
-    subdirectory written with overwrite — a retried micro-batch replaces
-    its own partial output instead of double-appending, and the
-    signature-table read excludes the current epoch so a retry never
-    flags its own first attempt as a duplicate. Existence probes use the
-    Hadoop FileSystem API (never driver-local ``os.path``)."""
+    exact-Jaccard verification (the batch text is at hand). The
+    signature-table read excludes the current epoch, so a retry never
+    flags its own first attempt as a duplicate."""
     from record_linkage_spark.operators.dedup import (
         minhash_band_rows,
         minhash_cross_from_bands,
@@ -366,8 +367,6 @@ def stream_dedup(
     )
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         batch = batch_df.dropDuplicates(["doc_id"]).localCheckpoint()
         # one kernel pass per batch: the same materialized signatures feed
         # the within-batch scan, the cross scan, and the persisted table
@@ -393,7 +392,7 @@ def stream_dedup(
         banded = minhash_band_rows(
             sigs.select("doc_id", "sig"), num_bands, rows_per_band
         ).localCheckpoint()
-        if _fs_exists(spark, sig_dir):
+        if epoch_ids(spark, sig_dir) is not None:
             base_bands = (
                 spark.read.parquet(sig_dir)
                 .filter(F.col("epoch") != epoch_id)
@@ -406,24 +405,20 @@ def stream_dedup(
         else:
             dups = self_dups
         dups = dups.localCheckpoint()
-        dups.write.mode("overwrite").parquet(f"{dups_dir}/epoch={epoch_id}")
+        write_epoch(dups, dups_dir, epoch_id)
         survivors = batch.join(
             dups.select(F.col("new_id").alias("doc_id")).distinct(),
             "doc_id",
             "left_anti",
         ).localCheckpoint()
-        survivors.write.mode("overwrite").parquet(f"{corpus_dir}/epoch={epoch_id}")
-        banded.join(
-            survivors.select("doc_id"), "doc_id", "left_semi"
-        ).write.mode("overwrite").parquet(f"{sig_dir}/epoch={epoch_id}")
+        write_epoch(survivors, corpus_dir, epoch_id)
+        write_epoch(
+            banded.join(survivors.select("doc_id"), "doc_id", "left_semi"),
+            sig_dir,
+            epoch_id,
+        )
 
-    return (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(stream, skip_empty(process), checkpoint_dir)
 
 
 def stream_entities(
@@ -433,9 +428,6 @@ def stream_entities(
     assignment_dir: str,
     golden_dir: str,
     checkpoint_dir: str,
-    mode_cols: tuple = ("first_role", "primary_tool"),
-    longest_col: str = "last_text_norm",
-    sum_cols: tuple = ("n_tokens", "n_turns"),
 ):
     """Continuous entity maintenance downstream of ``stream_link``: new
     match-edge files fold into the (record -> entity) assignment via
@@ -457,18 +449,19 @@ def stream_entities(
     detection is the MERGE's own changelog).
 
     State tables (assignment, golden) are snapshot-per-epoch: each batch
-    writes the full new state under ``epoch=<id>`` and reads the latest
-    PRIOR epoch, so a retried micro-batch overwrites its own snapshot
-    instead of compounding (same exactly-once pattern as the other
-    sinks; on a warehouse deployment both become Iceberg MERGE on the
-    same key). With no prior epoch the old state is empty, so the first
-    batch takes the same contraction path as every later one. Only records that appear in match edges enter the
-    assignment — the golden table covers LINKED entities; unlinked
-    singletons stay in the profile base. Returns the StreamingQuery."""
+    writes the full new state and reads the latest snapshot other than
+    its own. With no such snapshot the old state is empty, so the first
+    batch takes the same contraction path as every later one. Golden
+    records fuse with ``survivorship.CONVERSATION_FUSION``. Only records
+    that appear in match edges enter the assignment — the golden table
+    covers LINKED entities; unlinked singletons stay in the profile
+    base. Returns the StreamingQuery."""
     from record_linkage_spark.operators.clustering import incremental_components
     from record_linkage_spark.operators.survivorship import (
-        incremental_golden_records,
+        CONVERSATION_FUSION,
+        CONVERSATION_FUSION_COLS,
         golden_records,
+        incremental_golden_records,
         touched_entities,
     )
 
@@ -483,29 +476,6 @@ def stream_entities(
         .option("maxFilesPerTrigger", 16)
         .parquet(matches_dir)
     )
-
-    def _latest_epoch(path: str, before: int) -> int | None:
-        jvm = spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-        if not fs.exists(p):
-            return None
-        best = None
-        for st in fs.listStatus(p):
-            name = st.getPath().getName()
-            if name.startswith("epoch="):
-                e = int(name.split("=", 1)[1])
-                if e != before and (best is None or e > best):
-                    best = e
-        return best
-
-    fuse = dict(
-        id_col="conv_id",
-        mode_cols=tuple(mode_cols),
-        longest_col=longest_col,
-        sum_cols=tuple(sum_cols),
-    )
-    prof_cols = ["conv_id", *mode_cols, longest_col, *sum_cols]
 
     def _rebuild_updated(assign: DataFrame, updated_ids: DataFrame) -> DataFrame:
         """Recompute components for every entity containing an updated
@@ -555,68 +525,57 @@ def stream_entities(
         # carries no edge rows — a DELETE wave is exactly that (the
         # tombstone epoch writes an empty edge file, the batch fires
         # empty, and the retraction still has to propagate)
-        updated = None
-        if "epoch" in base.columns:
-            updated = (
-                base.groupBy("conv_id")
-                .agg(F.count_distinct("epoch").alias("_n"))
-                .filter(F.col("_n") > 1)
-                .select("conv_id")
-                .localCheckpoint()
-            )
-        if batch_df.isEmpty() and (updated is None or updated.isEmpty()):
+        updated = (
+            base.groupBy("conv_id")
+            .agg(F.count_distinct("epoch").alias("_n"))
+            .filter(F.col("_n") > 1)
+            .select("conv_id")
+            .localCheckpoint()
+        )
+        any_updated = not updated.isEmpty()
+        if not any_updated and batch_df.isEmpty():
             return
         edges = batch_df.select(
             F.col("id_A").alias("src"), F.col("id_B").alias("dst")
         ).localCheckpoint()
-        profiles = _latest_profiles(base).select(*prof_cols)
+        profiles = _latest_profiles(base).select(*CONVERSATION_FUSION_COLS)
 
-        prev = _latest_epoch(assignment_dir, before=epoch_id)
+        prev = max(
+            (e for e in epoch_ids(spark, assignment_dir) or () if e != epoch_id),
+            default=None,
+        )
         if prev is None:
-            # no prior epoch: the old state is empty
             old_assign = spark.createDataFrame([], "conv_id string, entity_id string")
-            old_golden = golden_records(profiles, old_assign, **fuse)
+            old_golden = golden_records(profiles, old_assign, **CONVERSATION_FUSION)
         else:
-            old_assign = spark.read.parquet(f"{assignment_dir}/epoch={prev}")
-            old_golden = spark.read.parquet(f"{golden_dir}/epoch={prev}")
+            old_assign = spark.read.parquet(_epoch_dir(assignment_dir, prev))
+            old_golden = spark.read.parquet(_epoch_dir(golden_dir, prev))
         # 1) fold NEW edges in via contraction (the append path)
         new_assign = incremental_components(old_assign, edges)
         # 2) rebuild entities whose members were UPDATED — their old
         #    edges are retracted, which can split the component; the
         #    rebuild also drops streamed edges an update already
         #    invalidated (every such edge touches an updated conversation)
-        if updated is not None and not updated.isEmpty():
+        if any_updated:
             new_assign = _rebuild_updated(new_assign, updated)
         new_assign = new_assign.localCheckpoint()
-        touched = touched_entities(old_assign, new_assign)
-        if updated is not None:
-            # content-only updates keep their assignment but must
-            # still re-fuse their entity's golden record
-            touched = (
-                touched.unionByName(
-                    new_assign.join(
-                        updated, "conv_id", "left_semi"
-                    ).select("entity_id")
-                )
-                .distinct()
+        # content-only updates keep their assignment but must still
+        # re-fuse their entity's golden record
+        touched = (
+            touched_entities(old_assign, new_assign)
+            .unionByName(
+                new_assign.join(updated, "conv_id", "left_semi").select("entity_id")
             )
+            .distinct()
+        )
         golden_new = incremental_golden_records(
-            profiles, new_assign, old_golden, touched, **fuse
+            profiles, new_assign, old_golden, touched, **CONVERSATION_FUSION
         )
-        new_assign.write.mode("overwrite").parquet(
-            f"{assignment_dir}/epoch={epoch_id}"
-        )
-        golden_new.write.mode("overwrite").parquet(
-            f"{golden_dir}/epoch={epoch_id}"
-        )
+        write_epoch(new_assign, assignment_dir, epoch_id)
+        write_epoch(golden_new, golden_dir, epoch_id)
 
-    return (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    # not skip_empty: a DELETE wave arrives as an empty batch (see above)
+    return start_foreach_batch(stream, process, checkpoint_dir)
 
 
 def stream_histograms(
@@ -638,9 +597,7 @@ def stream_histograms(
     the streaming epoch layout. Old batches' raw turns are never
     re-read (the signature-table discipline of :func:`stream_dedup`,
     here for the metric distribution instead of the dedup state).
-
-    Epoch-keyed overwrite makes retried batches exactly-once, like
-    every other sink in this module. Returns the StreamingQuery.
+    Returns the StreamingQuery.
     """
     from record_linkage_spark.operators.sketches import int_histogram
 
@@ -651,22 +608,13 @@ def stream_histograms(
     )
 
     def write_hist(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         rows = batch_df.select(
             *group_cols, F.expr(value_expr).cast("long").alias("_metric")
         )
         hist = int_histogram(rows, "_metric", list(group_cols), precision)
-        out = os.path.join(hist_dir, f"epoch={epoch_id}")
-        hist.write.mode("overwrite").parquet(out)
+        write_epoch(hist, hist_dir, epoch_id)
 
-    return (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(write_hist)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(stream, skip_empty(write_hist), checkpoint_dir)
 
 
 def merged_histogram(

@@ -74,7 +74,15 @@ def _calib() -> float:
 def replica_docs(docs, k: int):
     """Replica k of the corpus: doc_id offset + token-wise rename (a
     bijection on the vocabulary — every within-replica Jaccard is
-    preserved exactly; cross-replica token sets are disjoint)."""
+    preserved exactly; cross-replica token sets are disjoint).
+
+    Raises ValueError when a base token already ends in ``zq<digits>``:
+    replica j's rename of its prefix would then equal it, the replicas
+    would share tokens, and the exactly-10x pair count would not hold."""
+    if not docs.filter(F.col("text").rlike(r"zq[0-9]+(\s|$)")).isEmpty():
+        raise ValueError(
+            "a base token ends in zq<digits>, which replica renames collide with"
+        )
     if k == 0:
         return docs
     return docs.select(

@@ -1,8 +1,16 @@
 """Incremental linkage: increment run == batch run restricted to pairs
 touching the new ids."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
+
+
+def latest(spark, d):
+    """The newest epoch snapshot of an epoch-partitioned table."""
+    eps = [int(n.split("=")[1]) for n in os.listdir(d) if n.startswith("epoch=")]
+    return spark.read.parquet(f"{d}/epoch={max(eps)}")
 
 
 def _profiles(spark, n_entities, dup_rate=1.8):
@@ -231,8 +239,6 @@ def test_stream_update_wave_reassigns_entity(spark, tmp_path):
         transcripts_table,
     )
 
-    import os
-
     model = LinearModel(
         weights=[2.0, 1.0, 1.5, 0.8, 0.6, 0.3, 0.5, 1.2, 0.4, 0.3, 0.8, 0.8, 0.8, 0.4, 1.0, 2.0],
         intercept=-6.0,
@@ -255,11 +261,7 @@ def test_stream_update_wave_reassigns_entity(spark, tmp_path):
     stream_link(*largs).awaitTermination()
     stream_entities(*eargs).awaitTermination()
 
-    def latest(d):
-        eps = [int(n.split("=")[1]) for n in os.listdir(d) if n.startswith("epoch=")]
-        return spark.read.parquet(f"{d}/epoch={max(eps)}")
-
-    a1 = {r.conv_id: r.entity_id for r in latest(dirs["assign"]).collect()}
+    a1 = {r.conv_id: r.entity_id for r in latest(spark, dirs["assign"]).collect()}
     e0 = sorted(
         (r.id_A, r.id_B)
         for r in spark.read.parquet(dirs["matches"]).collect()
@@ -306,7 +308,7 @@ def test_stream_update_wave_reassigns_entity(spark, tmp_path):
         .distinct()
     )
     want_assign = assign_entities(linked, edges_df)
-    got_assign = latest(dirs["assign"])
+    got_assign = latest(spark, dirs["assign"])
     assert sorted(map(tuple, got_assign.collect())) == sorted(
         map(tuple, want_assign.collect())
     )
@@ -323,7 +325,7 @@ def test_stream_update_wave_reassigns_entity(spark, tmp_path):
     prof_cols = ["conv_id", "first_role", "primary_tool", "last_text_norm",
                  "n_tokens", "n_turns"]
     want_golden = golden_records(profs_mut.select(*prof_cols), want_assign, **fuse)
-    assert sorted(map(tuple, latest(dirs["golden"]).collect())) == sorted(
+    assert sorted(map(tuple, latest(spark, dirs["golden"]).collect())) == sorted(
         map(tuple, want_golden.collect())
     )
 
@@ -350,8 +352,6 @@ def test_stream_delete_tombstone_wave(spark, tmp_path):
         generate_transcripts,
         transcripts_table,
     )
-
-    import os
 
     model = LinearModel(
         weights=[2.0, 1.0, 1.5, 0.8, 0.6, 0.3, 0.5, 1.2, 0.4, 0.3, 0.8, 0.8, 0.8, 0.4, 1.0, 2.0],
@@ -405,10 +405,6 @@ def test_stream_delete_tombstone_wave(spark, tmp_path):
     assert got_edges == want_edges
     assert not any(x in e for e in got_edges)
 
-    def latest(d):
-        eps = [int(n.split("=")[1]) for n in os.listdir(d) if n.startswith("epoch=")]
-        return spark.read.parquet(f"{d}/epoch={max(eps)}")
-
     edges_df = spark.createDataFrame(
         sorted(want_edges) or [("_none", "_none")], "src string, dst string"
     ).filter(F.col("src") != "_none")
@@ -420,7 +416,7 @@ def test_stream_delete_tombstone_wave(spark, tmp_path):
     want_assign = sorted(
         map(tuple, assign_entities(linked, edges_df).collect())
     )
-    got_assign = sorted(map(tuple, latest(dirs["assign"]).collect()))
+    got_assign = sorted(map(tuple, latest(spark, dirs["assign"]).collect()))
     assert x not in {c for c, _ in got_assign}
     assert got_assign == want_assign
 
@@ -448,8 +444,6 @@ def test_compact_state_blue_green_rollover(spark, tmp_path):
         generate_transcripts,
         transcripts_table,
     )
-
-    import os
 
     model = LinearModel(
         weights=[2.0, 1.0, 1.5, 0.8, 0.6, 0.3, 0.5, 1.2, 0.4, 0.3, 0.8, 0.8, 0.8, 0.4, 1.0, 2.0],
@@ -556,10 +550,6 @@ def test_compact_state_blue_green_rollover(spark, tmp_path):
     }
     assert got_edges == want_edges
 
-    def latest(d):
-        eps = [int(n.split("=")[1]) for n in os.listdir(d) if n.startswith("epoch=")]
-        return spark.read.parquet(f"{d}/epoch={max(eps)}")
-
     edges_df = spark.createDataFrame(sorted(want_edges), "src string, dst string")
     linked = (
         edges_df.select(F.col("src").alias("conv_id"))
@@ -567,7 +557,7 @@ def test_compact_state_blue_green_rollover(spark, tmp_path):
         .distinct()
     )
     want_assign = sorted(map(tuple, assign_entities(linked, edges_df).collect()))
-    got_assign = sorted(map(tuple, latest(dirs["g_assign"]).collect()))
+    got_assign = sorted(map(tuple, latest(spark, dirs["g_assign"]).collect()))
     assert got_assign == want_assign
 
 
@@ -619,14 +609,7 @@ def test_stream_entities_maintains_assignment_and_golden(spark, tmp_path):
     ).parquet(matches_dir)
     stream_entities(*args).awaitTermination()
 
-    # latest snapshot
-    import os
-
-    def latest(d):
-        eps = [int(n.split("=")[1]) for n in os.listdir(d) if n.startswith("epoch=")]
-        return spark.read.parquet(f"{d}/epoch={max(eps)}")
-
-    got_assign = latest(str(tmp_path / "assign"))
+    got_assign = latest(spark, str(tmp_path / "assign"))
     edges_df = spark.createDataFrame(all_edges, schema).select(
         F.col("id_A").alias("src"), F.col("id_B").alias("dst")
     )
@@ -651,9 +634,84 @@ def test_stream_entities_maintains_assignment_and_golden(spark, tmp_path):
     want_golden = golden_records(
         profiles.select(*prof_cols), want_assign, **fuse
     )
-    got_golden = latest(str(tmp_path / "golden"))
+    got_golden = latest(spark, str(tmp_path / "golden"))
     assert sorted(map(tuple, got_golden.collect())) == sorted(
         map(tuple, want_golden.collect())
+    )
+
+
+def _uncommit_last_batch(checkpoint_dir):
+    """Delete the newest commit of a streaming checkpoint, as if the query
+    had died after its sink writes; returns that batch id."""
+    commits = os.path.join(checkpoint_dir, "commits")
+    n = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    for f in (str(n), f".{n}.crc"):
+        if os.path.exists(os.path.join(commits, f)):
+            os.remove(os.path.join(commits, f))
+    return n
+
+
+def test_replayed_batch_rewrites_its_own_epoch(spark, tmp_path):
+    """The retry contract of the epoch layout: a batch whose commit was
+    lost replays under the same epoch id and overwrites its own output.
+    After replaying the last batch of stream_entities and then of
+    stream_link, the match, base, assignment and golden tables hold
+    exactly the rows they held before, and the replayed link batch did
+    not link a conversation to itself."""
+    from record_linkage_spark.operators.classifier import LinearModel
+    from record_linkage_spark.operators.incremental_link import HYDRATE_COLS
+    from record_linkage_spark.operators.rollup import rollup_conversations
+    from record_linkage_spark.streaming.incremental import (
+        stream_entities,
+        stream_link,
+    )
+    from record_linkage_spark.synth.transcripts import (
+        generate_transcripts,
+        transcripts_table,
+    )
+
+    model = LinearModel(
+        weights=[2.0, 1.0, 1.5, 0.8, 0.6, 0.3, 0.5, 1.2, 0.4, 0.3, 0.8, 0.8, 0.8, 0.4, 1.0, 2.0],
+        intercept=-6.0,
+        threshold=0.5,
+    )
+    raw = transcripts_table(
+        generate_transcripts(spark, n_entities=24, dup_rate=1.8)
+    ).localCheckpoint()
+    is_new = F.substring("conv_id", 1, 8).cast("int") >= 16
+    dirs = {n: str(tmp_path / n) for n in
+            ("in", "base", "matches", "assign", "golden", "ckl", "cke")}
+    rollup_conversations(raw.filter(~is_new)).drop("turns").select(
+        "conv_id", *HYDRATE_COLS
+    ).write.parquet(dirs["base"] + "/epoch=-1")
+    raw.filter(is_new).repartition(2, "conv_id").write.parquet(dirs["in"])
+    largs = (spark, dirs["in"], dirs["base"], dirs["matches"], dirs["ckl"], model)
+    eargs = (spark, dirs["matches"], dirs["base"], dirs["assign"],
+             dirs["golden"], dirs["cke"])
+    stream_link(*largs).awaitTermination()
+    stream_entities(*eargs).awaitTermination()
+
+    def tables():
+        return {
+            n: sorted(map(str, spark.read.parquet(dirs[n]).collect()))
+            for n in ("matches", "base", "assign", "golden")
+        }
+
+    first = tables()
+    assert first["matches"] and first["golden"]
+
+    # stream_entities first: a stream_link replay rewrites the edge files
+    # that the entity batch's offsets name
+    for ckpt, stream in ((dirs["cke"], lambda: stream_entities(*eargs)),
+                         (dirs["ckl"], lambda: stream_link(*largs))):
+        n = _uncommit_last_batch(ckpt)
+        stream().awaitTermination()
+        commits = os.listdir(os.path.join(ckpt, "commits"))
+        assert str(n) in commits and str(n + 1) not in commits  # replayed as n
+        assert tables() == first
+
+    assert all(
+        r.id_A != r.id_B for r in spark.read.parquet(dirs["matches"]).collect()
     )
 
 
