@@ -1323,73 +1323,6 @@ def q_rl_streaming_rollup(spark, sf):
     )
 
 
-def q_rl_stream_dedup(spark, sf):
-    """Streaming corpus dedup end-to-end: documents (plus planted messy
-    copies) land as two file batches; batch 2's copies must be flagged
-    against the corpus batch 1 accumulated. Returns the flagged
-    (new_id, dup_of) pairs — deterministic because the copies normalize
-    to exact shingle-set matches (tau=1.0 logic, see minhash_exactset)."""
-    import tempfile
-
-    from record_linkage_spark.streaming.incremental import DOC_SCHEMA, stream_dedup
-
-    root = tempfile.mkdtemp(prefix="rl_sdedup_")
-    in_dir, corpus, dups, ckpt = (
-        f"{root}/in", f"{root}/corpus", f"{root}/dups", f"{root}/ckpt"
-    )
-    # 200-doc slice keeps the entry cheap; the planted copies (doc_id<60)
-    # all land inside it
-    d = _t(spark, sf, "documents").filter(
-        F.col("text").isNotNull() & (F.col("doc_id") < 200)
-    ).select(F.col("doc_id").cast("string").alias("doc_id"), "text")
-    d.write.mode("append").parquet(in_dir)
-    q = stream_dedup(spark, in_dir, corpus, dups, ckpt, jaccard_threshold=1.0)
-    q.awaitTermination()
-    _messy_copies(
-        d.select(F.col("doc_id").cast("long").alias("doc_id"), "text")
-    ).select(F.col("doc_id").cast("string").alias("doc_id"), "text").write.mode(
-        "append"
-    ).parquet(in_dir)
-    q = stream_dedup(spark, in_dir, corpus, dups, ckpt, jaccard_threshold=1.0)
-    q.awaitTermination()
-    return spark.read.parquet(dups).select(
-        "new_id", "dup_of", F.round("jaccard", 6).alias("jaccard")
-    )
-
-
-def q_rl_stateful_summaries(spark, sf):
-    """applyInPandasWithState custom stateful operator: per-conversation
-    running summaries over a transcript stream (update mode)."""
-    import tempfile
-
-    from record_linkage_spark.streaming.incremental import TRANSCRIPT_SCHEMA
-    from record_linkage_spark.streaming.stateful import (
-        stateful_conversation_summaries,
-    )
-    from record_linkage_spark.synth.transcripts import transcripts_table
-
-    root = tempfile.mkdtemp(prefix="rl_stateful_")
-    transcripts_table(_synth(spark, n_entities=100)).write.mode("overwrite").parquet(
-        f"{root}/in"
-    )
-    stream = spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(f"{root}/in")
-    name = "rl_stateful_sink"
-    q = (
-        stateful_conversation_summaries(stream)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", f"{root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(
-        f"SELECT conv_id, max(n_turns) AS n_turns, max(n_tokens) AS n_tokens "
-        f"FROM {name} GROUP BY conv_id"
-    )
-
-
 def q_rl_multimodal_features(spark, sf):
     """Binary media payloads -> mapInPandas batch feature extraction."""
     from record_linkage_spark.operators.multimodal import (
@@ -1671,43 +1604,6 @@ def q_semantic_dedup(spark, sf):
     )
 
 
-def q_psnm_curve(spark, sf):
-    """Progressive (pay-as-you-go) ER schedule + cost/recall curve
-    (Whang et al. ICDE'13 / Papenbrock et al. TKDE'15): PSNM tiers over
-    documents ∪ full planted copies (same text -> same sort key, copy id
-    'eNNNN' sorts right after its source 'dNNNN'), truth = (source,
-    copy). The DuckDB twin replays the total order, the tier emission
-    and the cumulative curve with window functions."""
-    from record_linkage_spark.operators.progressive import (
-        progressive_recall_curve,
-        progressive_sn_schedule,
-    )
-
-    d = _t(spark, sf, "documents").filter(F.col("text").isNotNull())
-    key = F.lower(F.substring("text", 1, 12))
-    orig = d.select(
-        F.format_string("d%04d", F.col("doc_id")).alias("conv_id"),
-        key.alias("token_prefix"),
-    )
-    copies = d.filter(F.col("doc_id") < 40).select(
-        F.format_string("e%04d", F.col("doc_id")).alias("conv_id"),
-        key.alias("token_prefix"),
-    )
-    truth = d.filter((F.col("doc_id") < 40) & key.isNotNull() & (key != "")).select(
-        F.format_string("d%04d", F.col("doc_id")).alias("id_A"),
-        F.format_string("e%04d", F.col("doc_id")).alias("id_B"),
-    )
-    sched = progressive_sn_schedule(
-        orig.unionByName(copies), "token_prefix", max_distance=4
-    )
-    return progressive_recall_curve(sched, truth).select(
-        "priority",
-        "n_pairs_cum",
-        "n_matches_cum",
-        F.round("recall", 6).alias("recall"),
-    )
-
-
 def q_rl_group_linkage(spark, sf):
     """Group linkage (On et al. ICDE 2007): 1:1-matched group similarity
     over documents partitioned into 24 hash groups, with deterministic
@@ -1875,128 +1771,6 @@ def q_temporal_joins(spark, sf):
         F.col("n_observations").cast("double").alias("v"),
     )
     return a.unionByName(rj).unionByName(scd2)
-
-
-def q_rl_truth_discovery(spark, sf):
-    """Truth discovery (ACCU vote iteration) over documents-derived
-    claims: sources G/H are right on 60 calibration facts, B1/B2 wrong;
-    on 20 target facts H is silent and B1/B2 COPY the same wrong value —
-    majority vote loses 2-1, the learned-accuracy vote recovers the
-    truth. Iterative fixpoint — rows-only; semantics pinned by
-    test_truth_discovery.py."""
-    from record_linkage_spark.operators.truth_discovery import truth_discovery
-
-    d = _t(spark, sf, "documents").filter(F.col("doc_id") < 80)
-    i = F.col("doc_id").cast("long")
-    cal = d.filter(i < 60)
-    tgt = d.filter(i >= 60)
-    tv = F.concat(F.lit("true"), i.cast("string"))
-    claims = None
-    parts = [
-        cal.select(i.alias("entity_id"), F.lit("G").alias("source_id"), tv.alias("value")),
-        cal.select(i.alias("entity_id"), F.lit("H").alias("source_id"), tv.alias("value")),
-        cal.select(i.alias("entity_id"), F.lit("B1").alias("source_id"),
-                   F.concat(F.lit("wb1_"), i.cast("string")).alias("value")),
-        cal.select(i.alias("entity_id"), F.lit("B2").alias("source_id"),
-                   F.concat(F.lit("wb2_"), i.cast("string")).alias("value")),
-        tgt.select(i.alias("entity_id"), F.lit("G").alias("source_id"), tv.alias("value")),
-        tgt.select(i.alias("entity_id"), F.lit("B1").alias("source_id"),
-                   F.concat(F.lit("copy"), i.cast("string")).alias("value")),
-        tgt.select(i.alias("entity_id"), F.lit("B2").alias("source_id"),
-                   F.concat(F.lit("copy"), i.cast("string")).alias("value")),
-    ]
-    for p in parts:
-        claims = p if claims is None else claims.unionByName(p)
-    truths, _srcs = truth_discovery(
-        claims.withColumn("attr", F.lit("city")), iterations=4
-    )
-    return truths.select(
-        "entity_id", "attr", "value", F.round("score", 6).alias("score"), "n_sources"
-    )
-
-
-def q_pprl_dice(spark, sf):
-    """Privacy-preserving linkage end to end (Schnell et al. 2009 CLK +
-    Durham Bloom-LSH blocking): field-tagged padded 2-grams -> k=4 md5
-    positions mod 512 -> banded pattern blocking -> Dice over set-bit
-    arrays, on documents-derived field triples ∪ shifted near-copies.
-    The DuckDB twin replays every stage byte-for-byte (portable md5
-    positions; band pattern = comma-joined sorted positions)."""
-    from record_linkage_spark.operators.pprl import (
-        clk_candidate_pairs,
-        clk_encode,
-        dice_pairs,
-    )
-
-    d = _t(spark, sf, "documents").filter(
-        F.col("text").isNotNull() & (F.col("doc_id") < 80)
-    )
-
-    def fields(shift):
-        return [
-            F.lower(F.substring("text", 1 + shift, 6)).alias("f1"),
-            F.lower(F.substring("text", 8, 6)).alias("f2"),
-            F.lower(F.substring("text", 15, 5)).alias("f3"),
-        ]
-
-    base = d.select(F.col("doc_id").cast("long").alias("record_id"), *fields(0))
-    dup = d.select(
-        (F.col("doc_id") + F.lit(5_000_000)).alias("record_id"), *fields(1)
-    )
-    enc = clk_encode(
-        base.unionByName(dup), ["f1", "f2", "f3"], m=512, k=4, portable=True
-    )
-    cands = clk_candidate_pairs(enc, n_bands=8, m=512)
-    return dice_pairs(cands, enc).select(
-        "id_A", "id_B", F.round("dice", 6).alias("dice")
-    )
-
-
-def q_rl_swoosh(spark, sf):
-    """R-Swoosh merge-based ER (Benjelloun et al. VLDBJ 2009) over
-    id-derived feature sets with planted evidence-combination chains:
-    match = shared email OR (shared name AND shared phone); the modular
-    construction makes merged records match third records neither
-    constituent matched, so the fixpoint needs >1 round. Iterative —
-    rows-only; semantics pinned by test_swoosh.py against a sequential
-    R-Swoosh reference."""
-    from record_linkage_spark.operators.swoosh import swoosh_resolve
-
-    d = _t(spark, sf, "documents").filter(F.col("doc_id") < 120)
-    i = F.col("doc_id").cast("long")
-    k, role = (i / 3).cast("long").cast("string"), i % 3
-    empty = F.array().cast("array<string>")
-    # doc_id < 90: triples (a: name+email, b: email+phone, c: name+phone)
-    # — c matches only merge(a, b), forcing a second round; 90..119 are
-    # singletons with unique values
-    recs = d.select(
-        i.alias("record_id"),
-        F.when(i >= 90, F.array(F.concat(F.lit("nm"), i.cast("string"))))
-        .when(role != 1, F.array(F.concat(F.lit("nm"), k)))
-        .otherwise(empty)
-        .alias("name"),
-        F.when(i >= 90, F.array(F.concat(F.lit("em"), i.cast("string"))))
-        .when(role != 2, F.array(F.concat(F.lit("em"), k)))
-        .otherwise(empty)
-        .alias("email"),
-        F.when(i >= 90, F.array(F.concat(F.lit("ph"), i.cast("string"))))
-        .when(role != 0, F.array(F.concat(F.lit("ph"), k)))
-        .otherwise(empty)
-        .alias("phone"),
-    )
-    out = swoosh_resolve(
-        recs,
-        ["name", "email", "phone"],
-        clauses=[["email"], ["name", "phone"]],
-    )
-    return out.select(
-        "entity_id",
-        F.size("members").alias("n_members"),
-        "n_rounds",
-        F.size("name").alias("n_names"),
-        F.size("email").alias("n_emails"),
-        F.size("phone").alias("n_phones"),
-    )
 
 
 def q_token_budget(spark, sf):
@@ -3013,27 +2787,6 @@ def q_label_prop_top(spark, sf):
     )
 
 
-def q_schema_match(spark, sf):
-    """Instance-based schema matching (``operators/schema_match.py``):
-    the full exact value-Jaccard score matrix between customer and
-    supplier string/int columns (12 pairs, zero-overlap rows included).
-    The DuckDB twin replays unpivot -> distinct -> value join ->
-    Jaccard; string-typed columns only, so CAST rendering is portable."""
-    from record_linkage_spark.operators.schema_match import value_overlap
-
-    ov = value_overlap(
-        _t(spark, sf, "customer"),
-        _t(spark, sf, "supplier"),
-        ["c_name", "c_nationkey", "c_mktsegment", "c_custkey"],
-        ["s_name", "s_nationkey", "s_suppkey"],
-    )
-    return ov.select(
-        F.lit("schema_match").alias("chk"),
-        F.concat("lcol", F.lit(">"), "rcol").alias("k"),
-        F.round("value_jaccard", 6).alias("v"),
-    )
-
-
 def q_hll_check(spark, sf):
     """HyperLogLog fold (``operators/sketches.py``): the full register
     table (exact integers — max rho per register, portable md5_60 hash,
@@ -3466,35 +3219,6 @@ def q_cohort_funnel_check(spark, sf):
     return coh.unionByName(fun)
 
 
-def q_hardneg_check(spark, sf):
-    """Hard-negative mining fold (``operators/active.py``): the brute
-    cosine top-5 (the oracle-proven ``ann_brute_topk`` frame) with
-    planted positives (vec v ~ v+1 for v < 10) anti-joined out, top-3
-    survivors per query re-ranked. The DuckDB twin wraps the same
-    top-k SQL with the canonical-pair NOT EXISTS and the re-rank."""
-    from record_linkage_spark.operators.active import hard_negatives
-
-    topk = q_ann_brute_topk(spark, sf)
-    pos = (
-        _t(spark, sf, "embeddings")
-        .filter(F.col("vec_id") < 10)
-        .select(
-            F.col("vec_id").alias("id_A"), (F.col("vec_id") + 1).alias("id_B")
-        )
-    )
-    hn = hard_negatives(topk, pos, per_query=3)
-    return hn.select(
-        F.lit("hardneg").alias("chk"),
-        F.concat_ws(
-            ":",
-            F.col("query_id").cast("string"),
-            F.col("hn_rank").cast("string"),
-            F.col("neighbor_id").cast("string"),
-        ).alias("k"),
-        F.col("cosine").cast("double").alias("v"),
-    )
-
-
 def q_chunks_check(spark, sf):
     """Chunking fold (``operators/chunking.py``): overlapping 32-token
     windows at stride 16 over the first 120 documents; each row's check
@@ -3726,9 +3450,8 @@ def q_scalar_checks(spark, sf):
     A6 confusion counts, X1 hash-split sizes — one (chk, k, v) frame —
     plus the corpus-profile rows (n-gram top-k + length quantiles,
     ``q_corpus_profile``) verbatim, the first-round BPE pair counts
-    (``q_bpe_pairs``), the PageRank top-25 (``q_pagerank_top``), and
-    the schema-match Jaccard matrix (``q_schema_match``): all sides
-    are already (chk, k, v) tagged, so the unions cost nothing and
+    (``q_bpe_pairs``) and the PageRank top-25 (``q_pagerank_top``):
+    all sides are already (chk, k, v) tagged, so the unions cost nothing and
     keep the window at 50 slots."""
     def tag(df, chk, k, v):
         return df.select(
@@ -3756,7 +3479,6 @@ def q_scalar_checks(spark, sf):
         .unionByName(q_corpus_profile(spark, sf))
         .unionByName(q_bpe_pairs(spark, sf))
         .unionByName(q_pagerank_top(spark, sf))
-        .unionByName(q_schema_match(spark, sf))
         .unionByName(q_label_prop_top(spark, sf))
         .unionByName(q_hll_check(spark, sf))
         .unionByName(q_hh_check(spark, sf))
@@ -3772,7 +3494,6 @@ def q_scalar_checks(spark, sf):
         .unionByName(q_kmv_check(spark, sf))
         .unionByName(q_skew_check(spark, sf))
         .unionByName(q_chunks_check(spark, sf))
-        .unionByName(q_hardneg_check(spark, sf))
         .unionByName(q_cohort_funnel_check(spark, sf))
         .unionByName(q_o2o_check(spark, sf))
         .unionByName(q_greedy_check(spark, sf))
@@ -3874,8 +3595,6 @@ def q_similarity_funcs(spark, sf):
       kind='soft_tfidf'  SoftTFIDF hybrid comparator rows
                     (``q_soft_tfidf`` verbatim: v1=soft_tfidf,
                     v2=st_ab, v3=st_ba)
-      kind='pprl'   privacy-preserving CLK Dice pairs
-                    (``q_pprl_dice`` verbatim: v1=dice)
     """
     from record_linkage_spark.functions.similarity import (
         jw_sim,
@@ -3928,15 +3647,7 @@ def q_similarity_funcs(spark, sf):
         F.col("st_ab").alias("v2"),
         F.col("st_ba").alias("v3"),
     )
-    pp = q_pprl_dice(spark, sf).select(
-        F.lit("pprl").alias("kind"),
-        F.col("id_A").alias("id1"),
-        F.col("id_B").alias("id2"),
-        F.col("dice").alias("v1"),
-        F.lit(0.0).alias("v2"),
-        F.lit(0.0).alias("v3"),
-    )
-    return names.unionByName(me).unionByName(st).unionByName(pp)
+    return names.unionByName(me).unionByName(st)
 
 
 def q_text_stats(spark, sf):
@@ -4593,16 +4304,13 @@ def q_span_checks(spark, sf):
 
 
 def q_sn_progressive(spark, sf):
-    """Sorted-neighborhood composite, union-tagged into one
+    """Sorted-neighborhood pairs, tagged into one
     (kind, k1, k2, i1, i2, d1) frame:
 
       kind='sn'    windowed SN pairs (``q_sn_pairs``: k1=id_A, k2=id_B,
                    i1=rank_A, i2=rank_B)
-      kind='psnm'  progressive-ER cost/recall curve (``q_psnm_curve``:
-                   k1=priority, i1=n_pairs_cum, i2=n_matches_cum,
-                   d1=recall)
     """
-    sn = q_sn_pairs(spark, sf).select(
+    return q_sn_pairs(spark, sf).select(
         F.lit("sn").alias("kind"),
         F.col("id_A").alias("k1"),
         F.col("id_B").alias("k2"),
@@ -4610,16 +4318,6 @@ def q_sn_progressive(spark, sf):
         F.col("rank_B").alias("i2"),
         F.lit(0.0).alias("d1"),
     )
-    ps = q_psnm_curve(spark, sf).select(
-        F.lit("psnm").alias("kind"),
-        F.col("priority").cast("string").alias("k1"),
-        F.lit("").alias("k2"),
-        F.col("n_pairs_cum").alias("i1"),
-        F.col("n_matches_cum").alias("i2"),
-        F.col("recall").alias("d1"),
-    )
-    return sn.unionByName(ps)
-
 
 def q_agent_analytics(spark, sf):
     """Agent-behavior analytics composite, union-tagged into one
@@ -4775,7 +4473,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # -- F: scalar similarity functions
         "similarity_funcs": q_similarity_funcs,  # F1 + F2 + Monge-Elkan + SoftTFIDF + PPRL
         # -- blocking families beyond equality cascades
-        "sn_progressive": q_sn_progressive,  # SN pairs + progressive-ER curve
+        "sn_progressive": q_sn_progressive,  # SN pairs
         "meta_blocking": q_meta_blocking,
         # -- dedup / similarity-search / curation extras
         "dedup_checks": q_dedup_checks,    # exact + token-Jaccard/TF-IDF
@@ -4802,15 +4500,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # streaming ops — no portable SQL twin; each pinned by pytest).
         # EVERY oracle-backed entry sits inside the 50-slot window: the
         # former standalone past-window oracles (span_dedup,
-        # semantic_dedup, soft_tfidf, psnm_curve, pprl_dice, lm_entropy,
-        # dsir_select, prefix_dups, the five agent-analytics checks,
-        # conv_reseg, corpus_profile) now ride verbatim inside window
-        # composites — see q_span_checks, q_near_dup_pairs,
-        # q_similarity_funcs, q_sn_progressive, q_web_filters,
-        # q_transcript_checks, q_agent_analytics, q_scalar_checks. ----
-        "rl_swoosh": q_rl_swoosh,
+        # semantic_dedup, soft_tfidf, lm_entropy, dsir_select,
+        # prefix_dups, the five agent-analytics checks, conv_reseg,
+        # corpus_profile) now ride verbatim inside window composites —
+        # see q_span_checks, q_near_dup_pairs, q_similarity_funcs,
+        # q_sn_progressive, q_web_filters, q_transcript_checks,
+        # q_agent_analytics, q_scalar_checks. ----
         "rl_group_linkage": q_rl_group_linkage,
-        "rl_truth_discovery": q_rl_truth_discovery,
         "rl_profiles": q_rl_profiles,
         "rl_ground_truth": q_rl_ground_truth,
         "rl_sorted_neighborhood": q_rl_sorted_neighborhood,
@@ -4835,8 +4531,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "rl_augment": q_rl_augment,
         "rl_incremental_link": q_rl_incremental_link,
         "rl_streaming_rollup": q_rl_streaming_rollup,
-        "rl_stream_dedup": q_rl_stream_dedup,
-        "rl_stateful_summaries": q_rl_stateful_summaries,
     }
 
 
@@ -5013,31 +4707,6 @@ def _composite_oracles(base: dict[str, str]) -> dict[str, str]:
             + "top AS (SELECT node, round(r, 6) AS v, "
             "row_number() OVER (ORDER BY round(r, 6) DESC, node) AS rn FROM r3) "
             "SELECT node AS k, v FROM top WHERE rn <= 25",
-            "k", "v",
-        ),
-        tagged(
-            "schema_match",
-            # instance-based schema matching: full 4x4 exact value-
-            # Jaccard matrix between customer and supplier columns
-            "WITH L AS (SELECT DISTINCT lcol, v FROM ("
-            "SELECT 'c_name' AS lcol, lower(CAST(c_name AS VARCHAR)) AS v FROM customer "
-            "UNION ALL SELECT 'c_nationkey', lower(CAST(c_nationkey AS VARCHAR)) FROM customer "
-            "UNION ALL SELECT 'c_mktsegment', lower(CAST(c_mktsegment AS VARCHAR)) FROM customer "
-            "UNION ALL SELECT 'c_custkey', lower(CAST(c_custkey AS VARCHAR)) FROM customer"
-            ") WHERE v IS NOT NULL), "
-            "R AS (SELECT DISTINCT rcol, v FROM ("
-            "SELECT 's_name' AS rcol, lower(CAST(s_name AS VARCHAR)) AS v FROM supplier "
-            "UNION ALL SELECT 's_nationkey', lower(CAST(s_nationkey AS VARCHAR)) FROM supplier "
-            "UNION ALL SELECT 's_suppkey', lower(CAST(s_suppkey AS VARCHAR)) FROM supplier"
-            ") WHERE v IS NOT NULL), "
-            "szl AS (SELECT lcol, count(*) AS nl FROM L GROUP BY lcol), "
-            "szr AS (SELECT rcol, count(*) AS nr FROM R GROUP BY rcol), "
-            "inter AS (SELECT lcol, rcol, count(*) AS ni "
-            "FROM L JOIN R ON L.v = R.v GROUP BY lcol, rcol) "
-            "SELECT szl.lcol || '>' || szr.rcol AS k, "
-            "round(coalesce(ni, 0) / CAST(nl + nr - coalesce(ni, 0) AS DOUBLE), 6) AS v "
-            "FROM szl CROSS JOIN szr LEFT JOIN inter "
-            "ON szl.lcol = inter.lcol AND szr.rcol = inter.rcol",
             "k", "v",
         ),
         tagged(
@@ -5493,24 +5162,6 @@ def _composite_oracles(base: dict[str, str]) -> dict[str, str]:
             "|| ':' || piece[1] || ':' || piece[len(piece)] AS k, "
             "CAST(len(piece) AS DOUBLE) AS v FROM c)"
         ),
-        # hard-negative mining (operators/active.py): the ann_brute_topk
-        # frame minus planted positives, top-3 survivors per query
-        (
-            "SELECT chk, k, v FROM ("
-            f"WITH tk AS ({base['ann_brute_topk']}), "
-            "pos AS (SELECT vec_id AS ka, vec_id + 1 AS kb "
-            "FROM embeddings WHERE vec_id < 10), "
-            "surv AS (SELECT * FROM tk WHERE NOT EXISTS ("
-            "SELECT 1 FROM pos WHERE "
-            "least(tk.query_id, tk.neighbor_id) = pos.ka "
-            "AND greatest(tk.query_id, tk.neighbor_id) = pos.kb)), "
-            "r AS (SELECT query_id, neighbor_id, cosine, row_number() "
-            "OVER (PARTITION BY query_id ORDER BY cosine DESC, "
-            "neighbor_id ASC) AS hn FROM surv) "
-            "SELECT 'hardneg' AS chk, CAST(query_id AS VARCHAR) || ':' || "
-            "CAST(hn AS VARCHAR) || ':' || CAST(neighbor_id AS VARCHAR) AS k, "
-            "CAST(cosine AS DOUBLE) AS v FROM r WHERE hn <= 3)"
-        ),
         # cohort retention + strict-order funnel (operators/agent_analytics.py)
         (
             "SELECT chk, k, v FROM ("
@@ -5863,11 +5514,8 @@ def _composite_oracles(base: dict[str, str]) -> dict[str, str]:
 
     sn_progressive_sql = (
         "SELECT 'sn' AS kind, id_A AS k1, id_B AS k2, "
-        "rank_A AS i1, rank_B AS i2, 0.0 AS d1 "
-        f"FROM ({base['sn_pairs']}) "
-        "UNION ALL SELECT 'psnm', CAST(priority AS VARCHAR), '', "
-        "n_pairs_cum, n_matches_cum, recall "
-        f"FROM ({base['psnm_curve']})"
+        "rank_A AS i1, rank_B AS i2, CAST(0.0 AS DOUBLE) AS d1 "
+        f"FROM ({base['sn_pairs']})"
     )
 
     agent_analytics_sql = (
@@ -5992,9 +5640,7 @@ def _composite_oracles(base: dict[str, str]) -> dict[str, str]:
             "SELECT * FROM names UNION ALL SELECT * FROM monge "
             "UNION ALL SELECT 'soft_tfidf' AS kind, id_A, id_B, "
             "soft_tfidf, st_ab, st_ba "
-            f"FROM ({base['soft_tfidf']}) "
-            "UNION ALL SELECT 'pprl' AS kind, id_A, id_B, dice, 0.0, 0.0 "
-            f"FROM ({base['pprl_dice']})"
+            f"FROM ({base['soft_tfidf']})"
         ),
         "text_stats": (
             f"SELECT tc.doc_id, tc.n_ws, tc.n_bpe, q.n_tokens, q.stopword_ratio, "
@@ -7394,79 +7040,6 @@ def oracle_sql() -> dict[str, str]:
             "LEFT JOIN ab ON ab.id_A = p.id_A AND ab.id_B = p.id_B "
             "LEFT JOIN ba ON ba.id_A = p.id_A AND ba.id_B = p.id_B"
         ),
-        # progressive SN schedule + cumulative cost/recall curve: total
-        # order, tier emission and window cumsum replayed end to end
-        "psnm_curve": (
-            "WITH src AS (SELECT doc_id, lower(substr(text, 1, 12)) AS k "
-            "FROM documents WHERE text IS NOT NULL), "
-            "base AS ("
-            "SELECT printf('d%04d', doc_id) AS rid, k FROM src "
-            "WHERE k IS NOT NULL AND k != '' "
-            "UNION ALL SELECT printf('e%04d', doc_id), k FROM src "
-            "WHERE doc_id < 40 AND k IS NOT NULL AND k != ''), "
-            "ranked AS (SELECT rid, "
-            "row_number() OVER (ORDER BY k, rid) - 1 AS r FROM base), "
-            "pairs AS (SELECT a.rid AS id_A, b.rid AS id_B, "
-            "CAST(b.r - a.r AS INTEGER) AS priority "
-            "FROM ranked a JOIN ranked b ON b.r > a.r AND b.r - a.r <= 4), "
-            "truth AS (SELECT printf('d%04d', doc_id) AS ta, "
-            "printf('e%04d', doc_id) AS tb FROM src "
-            "WHERE doc_id < 40 AND k IS NOT NULL AND k != ''), "
-            "per AS (SELECT priority, count(*) AS n, "
-            "sum(CASE WHEN t.ta IS NOT NULL THEN 1 ELSE 0 END) AS mm "
-            "FROM pairs p LEFT JOIN truth t "
-            "ON p.id_A = t.ta AND p.id_B = t.tb GROUP BY priority), "
-            "tot AS (SELECT CAST(count(*) AS DOUBLE) AS nt FROM truth) "
-            "SELECT priority, "
-            "CAST(sum(n) OVER wcum AS BIGINT) AS n_pairs_cum, "
-            "CAST(sum(mm) OVER wcum AS BIGINT) AS n_matches_cum, "
-            "round(sum(mm) OVER wcum / (SELECT nt FROM tot), 6) AS recall "
-            "FROM per WINDOW wcum AS (ORDER BY priority "
-            "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
-        ),
-        # PPRL: CLK encode (field-tagged padded 2-grams, 4 md5 positions
-        # mod 512) -> banded pattern blocking -> Dice, replayed stage by
-        # stage; chr(1) mirrors the \x01 tag/seed separator
-        "pprl_dice": (
-            "WITH d AS (SELECT doc_id, text FROM documents "
-            "WHERE text IS NOT NULL AND doc_id < 80), "
-            "recs AS ("
-            "SELECT doc_id AS rid, lower(substr(text, 1, 6)) AS f1, "
-            "lower(substr(text, 8, 6)) AS f2, "
-            "lower(substr(text, 15, 5)) AS f3 FROM d "
-            "UNION ALL SELECT doc_id + 5000000, "
-            "lower(substr(text, 2, 6)), lower(substr(text, 8, 6)), "
-            "lower(substr(text, 15, 5)) FROM d), "
-            "fields AS ("
-            "SELECT rid, 'f1' AS fn, nullif(trim(f1), '') AS fv FROM recs "
-            "UNION ALL SELECT rid, 'f2', nullif(trim(f2), '') FROM recs "
-            "UNION ALL SELECT rid, 'f3', nullif(trim(f3), '') FROM recs), "
-            "grams AS (SELECT rid, fn || chr(1) || g AS tg FROM ("
-            "SELECT rid, fn, unnest(list_distinct("
-            "[substr(p, i, 2) for i in range(1, len(p))])) AS g "
-            "FROM (SELECT rid, fn, '_' || fv || '_' AS p FROM fields "
-            "WHERE fv IS NOT NULL))), "
-            "pos AS (SELECT DISTINCT rid, CAST("
-            "('0x' || substr(md5(CAST(i AS VARCHAR) || chr(1) || tg), 1, 15))"
-            "::BIGINT % 512 AS INTEGER) AS p "
-            "FROM grams, unnest([1, 2, 3, 4]) AS t(i)), "
-            "enc AS (SELECT rid, count(*) AS n FROM pos GROUP BY rid), "
-            "bands AS (SELECT rid, p // 64 AS b, "
-            "array_to_string(list_sort(list(p)), ',') AS pattern "
-            "FROM pos GROUP BY rid, p // 64), "
-            "cands AS (SELECT DISTINCT a.rid AS id_A, b.rid AS id_B "
-            "FROM bands a JOIN bands b "
-            "ON a.b = b.b AND a.pattern = b.pattern AND a.rid < b.rid), "
-            "inter AS (SELECT c.id_A, c.id_B, count(*) AS i "
-            "FROM cands c JOIN pos pa ON pa.rid = c.id_A "
-            "JOIN pos pb ON pb.rid = c.id_B AND pb.p = pa.p "
-            "GROUP BY c.id_A, c.id_B) "
-            "SELECT c.id_A, c.id_B, "
-            "round(2.0 * coalesce(i.i, 0) / (ea.n + eb.n), 6) AS dice "
-            "FROM cands c JOIN enc ea ON ea.rid = c.id_A "
-            "JOIN enc eb ON eb.rid = c.id_B "
-            "LEFT JOIN inter i ON i.id_A = c.id_A AND i.id_B = c.id_B"
-        ),
         # bigram-LM cross-entropy: tokenize -> BOS pad -> bigram/left-
         # context counts -> add-0.1 smoothing over V+1 -> -avg log2 p
         "lm_entropy": (
@@ -8009,11 +7582,10 @@ def oracle_sql() -> dict[str, str]:
         "token_budget", "simhash_hd", "c4_filters", "gopher_filters",
         # round-4 session-4 merges: the former past-window standalone
         # oracles now ride verbatim inside window composites
-        "soft_tfidf", "pprl_dice", "span_overlap", "span_dedup",
-        "semantic_dedup", "sn_pairs", "psnm_curve", "lm_entropy",
-        "dsir_select", "transcript_integrity", "prefix_dups", "conv_reseg",
-        "agent_loops", "tool_transitions", "tool_ngrams",
-        "transition_drift", "turn_boilerplate",
+        "soft_tfidf", "span_overlap", "span_dedup", "semantic_dedup",
+        "sn_pairs", "lm_entropy", "dsir_select", "transcript_integrity",
+        "prefix_dups", "conv_reseg", "agent_loops", "tool_transitions",
+        "tool_ngrams", "transition_drift", "turn_boilerplate",
     ):
         out.pop(merged, None)
     return out

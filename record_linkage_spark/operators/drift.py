@@ -230,12 +230,10 @@ def histogram_drift(
 ) -> DataFrame:
     """Per-group PSI / JSD / TV directly from two mergeable histogram
     states (``sketches.int_histogram`` frames: ``(group..., bucket,
-    n)``) — the drift report WITHOUT rescanning any data. This is how
-    drift composes with the streaming profile sink: per-epoch bucket
-    tables persist (``streaming.stream_histograms``), and comparing any
-    two epochs — or any two merged epoch ranges — costs a join of two
-    bucket-bound frames. Returns ``(group..., psi, jsd, tv, n_bins)``
-    with the same conventions as :func:`drift_scalars`."""
+    n)``) — the drift report WITHOUT rescanning any data: comparing two
+    persisted histogram states costs a join of two bucket-bound frames.
+    Returns ``(group..., psi, jsd, tv, n_bins)`` with the same
+    conventions as :func:`drift_scalars`."""
     gcols = list(group_cols)
     wa = Window.partitionBy(*gcols) if gcols else Window.partitionBy(F.lit(1))
     fa = a.select(

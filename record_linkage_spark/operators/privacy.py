@@ -6,8 +6,8 @@ review gates before release, and the standard gates are Sweeney's
 k-anonymity (every quasi-identifier equivalence class has >= k rows —
 IJUFKS 2002) and Machanavajjhala et al.'s l-diversity (every class
 carries >= l distinct sensitive values — TKDD 2007, the defense against
-the homogeneity attack k-anonymity misses). PPRL (``operators/pprl.py``)
-protects identifiers DURING linkage; these operators audit what leaves.
+the homogeneity attack k-anonymity misses). These operators audit what
+leaves the pipeline.
 
 Scale shape: each audit is ONE map-side-combined groupBy onto the
 equivalence-class table (bounded by the QI domain, not the row count);

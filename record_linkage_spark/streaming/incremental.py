@@ -313,114 +313,6 @@ def stream_link(
     return start_foreach_batch(stream, skip_empty(process), checkpoint_dir)
 
 
-DOC_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("text", T.StringType(), True),
-    ]
-)
-
-
-def stream_dedup(
-    spark: SparkSession,
-    input_dir: str,
-    corpus_dir: str,
-    dups_dir: str,
-    checkpoint_dir: str,
-    jaccard_threshold: float = 0.8,
-    sig_dir: str | None = None,
-    ngram: int = 3,
-    num_hashes: int = 32,
-    num_bands: int = 8,
-):
-    """Continuous corpus dedup: new document files -> per-batch MinHash
-    scan against the accumulated corpus plus a within-batch self-scan ->
-    flagged (new_id, dup_of, jaccard) rows land in ``dups_dir``; only
-    unflagged survivors land in ``corpus_dir``, so later batches dedup
-    against everything kept so far. Returns the StreamingQuery.
-
-    Scale shape: survivors' banded signatures ``(doc_id, bucket, sig)``
-    are PERSISTED to ``sig_dir`` each epoch, and the cross-corpus scan
-    joins the new batch's band rows against that table — the accumulated
-    corpus text is never re-read or re-shingled, so per-batch cost is
-    batch x touched-buckets regardless of corpus size. Cross-side
-    verification is the ``num_hashes``-sample MinHash estimate (exact at
-    tau=1.0, see ``minhash_cross_from_bands``); within-batch pairs get
-    exact-Jaccard verification (the batch text is at hand). The
-    signature-table read excludes the current epoch, so a retry never
-    flags its own first attempt as a duplicate."""
-    from record_linkage_spark.operators.dedup import (
-        minhash_band_rows,
-        minhash_cross_from_bands,
-        minhash_near_duplicates,
-        minhash_signature_kernel,
-    )
-
-    sig_dir = sig_dir or corpus_dir.rstrip("/") + "_sigs"
-    rows_per_band = num_hashes // num_bands
-    kernel = minhash_signature_kernel(ngram, num_hashes)
-
-    stream = (
-        spark.readStream.schema(DOC_SCHEMA)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(input_dir)
-    )
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        batch = batch_df.dropDuplicates(["doc_id"]).localCheckpoint()
-        # one kernel pass per batch: the same materialized signatures feed
-        # the within-batch scan, the cross scan, and the persisted table
-        sigs = (
-            batch.select("doc_id", F.col("text").alias("_text"))
-            .withColumn("sig", kernel(F.col("_text")))
-            .filter(F.col("sig").isNotNull())
-            .localCheckpoint()
-        )
-        # within-batch: canonical pairs, larger id is the duplicate
-        self_dups = minhash_near_duplicates(
-            batch,
-            jaccard_threshold=jaccard_threshold,
-            num_hashes=num_hashes,
-            num_bands=num_bands,
-            ngram=ngram,
-            signatures=sigs,
-        ).select(
-            F.col("id_B").alias("new_id"),
-            F.col("id_A").alias("dup_of"),
-            "jaccard",
-        )
-        banded = minhash_band_rows(
-            sigs.select("doc_id", "sig"), num_bands, rows_per_band
-        ).localCheckpoint()
-        if epoch_ids(spark, sig_dir) is not None:
-            base_bands = (
-                spark.read.parquet(sig_dir)
-                .filter(F.col("epoch") != epoch_id)
-                .select("doc_id", "bucket", "sig")
-            )
-            cross = minhash_cross_from_bands(
-                banded, base_bands, num_hashes, jaccard_threshold
-            )
-            dups = self_dups.unionByName(cross)
-        else:
-            dups = self_dups
-        dups = dups.localCheckpoint()
-        write_epoch(dups, dups_dir, epoch_id)
-        survivors = batch.join(
-            dups.select(F.col("new_id").alias("doc_id")).distinct(),
-            "doc_id",
-            "left_anti",
-        ).localCheckpoint()
-        write_epoch(survivors, corpus_dir, epoch_id)
-        write_epoch(
-            banded.join(survivors.select("doc_id"), "doc_id", "left_semi"),
-            sig_dir,
-            epoch_id,
-        )
-
-    return start_foreach_batch(stream, skip_empty(process), checkpoint_dir)
-
-
 def stream_entities(
     spark: SparkSession,
     matches_dir: str,
@@ -576,94 +468,3 @@ def stream_entities(
 
     # not skip_empty: a DELETE wave arrives as an empty batch (see above)
     return start_foreach_batch(stream, process, checkpoint_dir)
-
-
-def stream_histograms(
-    spark: SparkSession,
-    input_dir: str,
-    hist_dir: str,
-    checkpoint_dir: str,
-    value_expr: str = "length(text)",
-    group_cols: tuple[str, ...] = ("role",),
-    precision: int = 7,
-):
-    """Streaming corpus profiling via the mergeable quantile-histogram
-    sketch: each micro-batch writes ITS OWN bucket table under
-    ``hist_dir/epoch=N`` (state = bucket-bound rows, independent of
-    batch size), and readers merge on read with
-    :func:`merged_histogram` — the exact composition property
-    ``histogram_merge(epochs) == int_histogram(union)`` pinned by
-    ``test_sketches.py::test_histogram_merge_equals_union``, applied to
-    the streaming epoch layout. Old batches' raw turns are never
-    re-read (the signature-table discipline of :func:`stream_dedup`,
-    here for the metric distribution instead of the dedup state).
-    Returns the StreamingQuery.
-    """
-    from record_linkage_spark.operators.sketches import int_histogram
-
-    stream = (
-        spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(input_dir)
-    )
-
-    def write_hist(batch_df: DataFrame, epoch_id: int) -> None:
-        rows = batch_df.select(
-            *group_cols, F.expr(value_expr).cast("long").alias("_metric")
-        )
-        hist = int_histogram(rows, "_metric", list(group_cols), precision)
-        write_epoch(hist, hist_dir, epoch_id)
-
-    return start_foreach_batch(stream, skip_empty(write_hist), checkpoint_dir)
-
-
-def merged_histogram(
-    spark: SparkSession, hist_dir: str, group_cols: tuple[str, ...] = ("role",)
-) -> DataFrame:
-    """Merge all persisted epoch histograms (summed union — the
-    mergeability property makes this EQUAL the batch histogram over
-    every turn ever streamed, without re-reading any turn)."""
-    from record_linkage_spark.operators.sketches import histogram_merge
-
-    return histogram_merge(
-        [spark.read.parquet(hist_dir).drop("epoch")], list(group_cols)
-    )
-
-
-def epoch_drift(
-    spark: SparkSession,
-    hist_dir: str,
-    epochs_a,
-    epochs_b,
-    group_cols: tuple[str, ...] = ("role",),
-) -> DataFrame:
-    """Distribution drift between two sets of streamed epochs, computed
-    ENTIRELY from the persisted per-epoch bucket tables — no raw turn
-    is ever re-read. ``epochs_a`` / ``epochs_b`` are iterables of epoch
-    ids (e.g. yesterday's vs today's); each side merges by summed union
-    (the mergeability property) and the comparison is a join of two
-    bucket-bound frames (``operators.drift.histogram_drift``). The
-    streaming answer to "did the feed change?" at sketch cost."""
-    from record_linkage_spark.operators.drift import histogram_drift
-    from record_linkage_spark.operators.sketches import histogram_merge
-
-    all_hist = spark.read.parquet(hist_dir)
-    # validate BEFORE comparing: a typo'd / never-written epoch id would
-    # otherwise read as an empty side and report maximal drift — a
-    # confidently wrong "the feed changed" answer
-    available = {r.epoch for r in all_hist.select("epoch").distinct().collect()}
-
-    def _side(epochs) -> DataFrame:
-        ids = [int(e) for e in epochs]
-        if not ids:
-            raise ValueError("each side needs at least one epoch id")
-        missing = sorted(set(ids) - available)
-        if missing:
-            raise ValueError(
-                f"epochs {missing} have no persisted histogram under "
-                f"{hist_dir} (available: {sorted(available)})"
-            )
-        side = all_hist.filter(F.col("epoch").isin(ids)).drop("epoch")
-        return histogram_merge([side], list(group_cols))
-
-    return histogram_drift(_side(epochs_a), _side(epochs_b), list(group_cols))

@@ -156,13 +156,6 @@ COMMENTARY = {
         "and the per-round shape repeats identically, so the loop's cost "
         "is num_iters x this tree."
     ),
-    "schema_value_overlap": (
-        "Instance-based schema matching score matrix. Each table "
-        "unpivots ONCE (stack -> filter -> distinct with partial "
-        "aggregation); the value intersection is the single O(data) "
-        "hash join; the size matrix is the schema-sized cross join of "
-        "two aggregate outputs (|colsL| x |colsR| rows). Zero Python."
-    ),
     "bpe_pair_counts": (
         "BPE first merge round. The corpus collapses to the word table "
         "via one partial-aggregated groupBy; symbolization and the "
@@ -401,17 +394,6 @@ def _q_pagerank_iter(spark, sf):
     return pagerank(edges, num_iters=1, checkpoint_every=100)
 
 
-def _q_schema_overlap(spark, sf):
-    from record_linkage_spark.operators.schema_match import value_overlap
-
-    return value_overlap(
-        spark.read.parquet(f"{sf}/customer.parquet"),
-        spark.read.parquet(f"{sf}/supplier.parquet"),
-        ["c_name", "c_nationkey", "c_mktsegment", "c_custkey"],
-        ["s_name", "s_nationkey", "s_suppkey"],
-    )
-
-
 def _q_bpe_pair_counts(spark, sf):
     from record_linkage_spark.operators.bpe import (
         bpe_pair_counts,
@@ -632,7 +614,6 @@ FALLBACK = {
     "collective_evidence": _q_collective_evidence,
     "triangle_audit": _q_triangle_audit,
     "pagerank_iteration": _q_pagerank_iter,
-    "schema_value_overlap": _q_schema_overlap,
     "bpe_pair_counts": _q_bpe_pair_counts,
     "cms_sketch": _q_cms_sketch,
     "quantile_histogram": _q_quantile_histogram,

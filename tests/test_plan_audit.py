@@ -324,27 +324,6 @@ def test_span_removal_plan_is_pure_catalyst(spark):
     assert "partial_count" in plan   # span counts combine map-side
 
 
-def test_pprl_blocking_is_equality_join(spark):
-    """CLK banded blocking: candidates come from an equality join on
-    (band, pattern) — no cross product anywhere in encode/block/score."""
-    from record_linkage_spark.operators.pprl import (
-        clk_candidate_pairs,
-        clk_encode,
-        dice_pairs,
-    )
-
-    recs = _doc_df(spark).select(
-        F.col("doc_id").alias("record_id"),
-        F.substring("text", 1, 8).alias("f1"),
-        F.substring("text", 9, 8).alias("f2"),
-    )
-    enc = clk_encode(recs, ["f1", "f2"], m=128, k=2)
-    plan = _plan(dice_pairs(clk_candidate_pairs(enc, n_bands=4, m=128), enc))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "EvalPython" not in plan  # pure Catalyst throughout
-
-
 def test_semantic_dedup_pairs_join_on_cell(spark):
     """SemDeDup candidate pairs: within-cell equality self-join; the only
     nested-loop is the broadcast of the tiny centroid table (documented
@@ -468,7 +447,6 @@ def test_bucket_self_joins_carry_explicit_repartition(spark):
         simhash_near_duplicates,
         span_overlap_pairs,
     )
-    from record_linkage_spark.operators.pprl import clk_candidate_pairs, clk_encode
     from record_linkage_spark.operators.similarity_search import (
         embedding_near_duplicates,
         semantic_duplicate_pairs,
@@ -493,9 +471,6 @@ def test_bucket_self_joins_carry_explicit_repartition(spark):
         "ngram_block": _plan(ngram_jaccard_pairs(docs)),
         "span_overlap": _plan(span_overlap_pairs(docs, window=4)),
         "embedding": _plan(embedding_near_duplicates(vecs)),
-        "pprl": _plan(
-            clk_candidate_pairs(clk_encode(recs, ["name", "city"], m=64))
-        ),
         "meta_blocking": _plan(
             meta_block_prune(
                 recs,
@@ -605,28 +580,6 @@ def test_pagerank_iteration_plan_shape(spark):
     assert "CartesianProduct" not in plan
     assert "EvalPython" not in plan
     assert "partial_sum" in plan  # contrib sums combine map-side
-
-
-def test_schema_match_plan_shape(spark):
-    """Schema matching: the value intersection must be an equality
-    join (a cartesian here would be O(dataL x dataR)); distinct and
-    size aggregations combine map-side; the only cross join is the
-    schema-sized szl x szr matrix (|colsL| x |colsR| rows); no Python."""
-    from record_linkage_spark.operators.schema_match import value_overlap
-
-    docs = _doc_df(spark)
-    right = docs.select(
-        F.col("doc_id").alias("rid"), F.col("text").alias("rtext")
-    )
-    plan = _plan(value_overlap(docs, right))
-    assert "EvalPython" not in plan
-    assert "partial_count" in plan
-    # the O(data) value join is hash/sort-merge, never nested-loop:
-    # every BroadcastNestedLoopJoin in this plan is the schema-sized
-    # size-matrix cross join, whose build side is an aggregate result
-    assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan or (
-        "BroadcastHashJoin" in plan
-    )
 
 
 def test_bpe_plan_shapes(spark):

@@ -50,189 +50,6 @@ def test_windowed_turn_counts_memory_sink(spark, tmp_path):
     assert res.n == t.count()
 
 
-def test_stream_dedup_accumulates_and_flags(spark, tmp_path):
-    """Two availableNow runs sharing a checkpoint: run 2 must flag a copy
-    of a run-1 corpus doc (cross-scan against the accumulated corpus) and
-    an in-batch copy, and append only genuine survivors to the corpus."""
-    from record_linkage_spark.streaming.incremental import DOC_SCHEMA, stream_dedup
-
-    inp, corpus, dups, ckpt = (
-        str(tmp_path / d) for d in ("in", "corpus", "dups", "ckpt")
-    )
-    t1 = "the first unique document about distributed joins and shuffle planning in spark"
-    t2 = "a second unique document describing watermark semantics for late arriving events"
-    t3 = "a third document with completely different content about tokenizer vocabularies"
-
-    def put(rows):
-        # append part files into the flat source dir; the next availableNow
-        # run picks up exactly the files the checkpoint hasn't seen
-        spark.createDataFrame(rows, DOC_SCHEMA).write.mode("append").parquet(inp)
-
-    put([("a1", t1), ("b1", t2)])
-    q = stream_dedup(spark, inp, corpus, dups, ckpt)
-    q.awaitTermination(120)
-    got1 = {r.doc_id for r in spark.read.parquet(corpus).collect()}
-    assert got1 == {"a1", "b1"}
-
-    # run 2: c1 copies corpus doc a1; d1 is new; e1 copies d1 in-batch
-    put([("c1", t1), ("d1", t3), ("e1", t3)])
-    q = stream_dedup(spark, inp, corpus, dups, ckpt)
-    q.awaitTermination(120)
-
-    flagged = {(r.new_id, r.dup_of) for r in spark.read.parquet(dups).collect()}
-    assert ("c1", "a1") in flagged  # cross-run duplicate caught
-    assert ("e1", "d1") in flagged  # within-batch duplicate caught
-    assert all(nid in {"c1", "e1"} for nid, _ in flagged)
-    got2 = {r.doc_id for r in spark.read.parquet(corpus).collect()}
-    assert got2 == {"a1", "b1", "d1"}  # only the genuine survivor joined
-
-
-def test_stream_dedup_never_rereads_corpus_text(spark, tmp_path):
-    """The cross-corpus scan must run off the persisted signature table
-    alone: delete the accumulated corpus TEXT between batches and the next
-    batch still flags duplicates of batch-1 docs. (Round-2 weakness: the
-    old implementation re-read and re-shingled corpus_dir every batch —
-    O(corpus) per batch at 100 TB.)"""
-    import shutil
-
-    from record_linkage_spark.streaming.incremental import DOC_SCHEMA, stream_dedup
-
-    inp, corpus, dups, ckpt = (
-        str(tmp_path / d) for d in ("in", "corpus", "dups", "ckpt")
-    )
-    t1 = "an original reference document about salted self joins and skew handling"
-
-    def put(rows):
-        spark.createDataFrame(rows, DOC_SCHEMA).write.mode("append").parquet(inp)
-
-    put([("a1", t1)])
-    q = stream_dedup(spark, inp, corpus, dups, ckpt)
-    q.awaitTermination(120)
-
-    # corpus text gone; only the signature table remains
-    shutil.rmtree(corpus)
-    assert spark.read.parquet(corpus + "_sigs").count() > 0
-
-    put([("z1", t1)])
-    q = stream_dedup(spark, inp, corpus, dups, ckpt)
-    q.awaitTermination(120)
-
-    flagged = {(r.new_id, r.dup_of) for r in spark.read.parquet(dups).collect()}
-    assert ("z1", "a1") in flagged
-    # and the duplicate never entered the signature table
-    sig_ids = {r.doc_id for r in spark.read.parquet(corpus + "_sigs").collect()}
-    assert "z1" not in sig_ids and "a1" in sig_ids
-
-
-def test_stream_histograms_merge_equals_batch(spark, tmp_path):
-    """Per-epoch histogram sketches composed across two streamed waves
-    equal the batch histogram over all turns — and the second wave's
-    query never needs the first wave's raw turns (mergeable-state
-    discipline for metric distributions)."""
-    from pyspark.sql import functions as F
-
-    from record_linkage_spark.operators.sketches import (
-        histogram_quantiles,
-        int_histogram,
-    )
-    from record_linkage_spark.streaming.incremental import (
-        merged_histogram,
-        stream_histograms,
-    )
-    from record_linkage_spark.synth.transcripts import (
-        generate_transcripts,
-        transcripts_table,
-    )
-
-    raw = transcripts_table(
-        generate_transcripts(spark, n_entities=30, dup_rate=1.5)
-    ).localCheckpoint()
-    wave = F.substring("conv_id", 1, 8).cast("int") >= 20
-    in_dir, hist_dir, ck = (
-        str(tmp_path / "in"), str(tmp_path / "hist"), str(tmp_path / "ck")
-    )
-    args = (spark, in_dir, hist_dir, ck)
-
-    raw.filter(~wave).write.mode("append").parquet(in_dir)
-    stream_histograms(*args).awaitTermination()
-    raw.filter(wave).write.mode("append").parquet(in_dir)
-    stream_histograms(*args).awaitTermination()
-
-    merged = merged_histogram(spark, hist_dir)
-    batch = int_histogram(
-        raw.select("role", F.expr("length(text)").cast("long").alias("_metric")),
-        "_metric",
-        ["role"],
-        7,
-    )
-    assert sorted(map(tuple, merged.collect())) == sorted(
-        map(tuple, batch.collect())
-    )
-    # readout works on the merged state
-    qs = histogram_quantiles(merged, [0.5, 0.99], ["role"], precision=7)
-    assert qs.count() == raw.select("role").distinct().count() * 2
-
-
-def test_epoch_drift_from_persisted_sketches_only(spark, tmp_path):
-    """epoch_drift answers "did the feed change?" from the per-epoch
-    bucket tables alone: drift(wave1, wave1-rerun) == 0 while
-    drift(wave1, shifted-wave2) fires — and the raw turns can be
-    DELETED before the comparison (state-only discipline)."""
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from record_linkage_spark.streaming.incremental import (
-        epoch_drift,
-        stream_histograms,
-    )
-    from record_linkage_spark.synth.transcripts import (
-        generate_transcripts,
-        transcripts_table,
-    )
-
-    raw = transcripts_table(
-        generate_transcripts(spark, n_entities=30, dup_rate=1.5)
-    ).localCheckpoint()
-    wave = F.substring("conv_id", 1, 8).cast("int") >= 20
-    in_dir, hist_dir, ck = (
-        str(tmp_path / "in"), str(tmp_path / "hist"), str(tmp_path / "ck")
-    )
-    args = (spark, in_dir, hist_dir, ck)
-
-    raw.filter(~wave).write.mode("append").parquet(in_dir)
-    stream_histograms(*args).awaitTermination()
-    # wave 2: same conversations but text lengths shifted 10x
-    raw.filter(wave).withColumn(
-        "text", F.concat_ws("", F.array_repeat(F.col("text"), 10))
-    ).write.mode("append").parquet(in_dir)
-    stream_histograms(*args).awaitTermination()
-
-    epochs = sorted(
-        int(str(p.name).split("=")[1])
-        for p in (tmp_path / "hist").iterdir()
-        if "epoch=" in str(p.name)
-    )
-    assert len(epochs) >= 2
-    # the raw turns are gone; only the sketch state remains
-    shutil.rmtree(in_dir)
-
-    same = epoch_drift(spark, hist_dir, [epochs[0]], [epochs[0]])
-    assert all(r.psi == 0.0 and r.tv == 0.0 for r in same.collect())
-
-    moved = epoch_drift(spark, hist_dir, [epochs[0]], epochs[1:])
-    by_role = {r.role: r for r in moved.collect()}
-    assert any(r.psi > 0.25 for r in by_role.values())
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        epoch_drift(spark, hist_dir, [], [epochs[0]])
-    # a never-written epoch id must error, not read as maximal drift
-    with _pytest.raises(ValueError, match="no persisted histogram"):
-        epoch_drift(spark, hist_dir, [epochs[0]], [max(epochs) + 99])
-
-
 def _turn_rows(spark, rows):
     """(conv_id, role, text, ts_string) -> transcript-schema frame."""
     from pyspark.sql import functions as F
@@ -254,80 +71,11 @@ def _turn_rows(spark, rows):
     )
 
 
-def test_stream_histograms_late_data_contract(spark, tmp_path):
-    """THE late-data contract for the histogram/drift path:
-    stream_histograms epochs by PROCESSING batch, not event time — an
-    event arriving a day late by ts lands in its ARRIVAL epoch's bucket
-    table (visible to epoch_drift as that epoch's mass) and is NEVER
-    dropped: the merged histogram still equals the batch histogram over
-    every event regardless of lateness. Watermark-bounded dropping only
-    applies to the event-time-windowed surface (windowed_turn_counts,
-    pinned below)."""
-    from pyspark.sql import functions as F
-
-    from record_linkage_spark.operators.sketches import int_histogram
-    from record_linkage_spark.streaming.incremental import (
-        merged_histogram,
-        stream_histograms,
-    )
-
-    on_time = _turn_rows(
-        spark,
-        [
-            ("c1", "user", "hello there", "2024-06-02 12:00:00"),
-            ("c2", "assistant", "a longer on-time reply text", "2024-06-02 12:01:00"),
-        ],
-    )
-    late = _turn_rows(
-        spark,
-        # event time a full DAY before wave 1 — arrives in wave 2
-        [("c3", "late_role", "very late arriving row", "2024-06-01 09:00:00")],
-    )
-    in_dir, hist_dir, ck = (
-        str(tmp_path / "in"), str(tmp_path / "hist"), str(tmp_path / "ck")
-    )
-    args = (spark, in_dir, hist_dir, ck)
-    on_time.write.mode("append").parquet(in_dir)
-    stream_histograms(*args).awaitTermination()
-    late.write.mode("append").parquet(in_dir)
-    stream_histograms(*args).awaitTermination()
-
-    # the late row's mass sits in the SECOND epoch's state, not the first
-    per_epoch = {
-        r.epoch: set(r2.role for r2 in
-                     spark.read.parquet(hist_dir).filter(F.col("epoch") == r.epoch)
-                     .select("role").distinct().collect())
-        for r in spark.read.parquet(hist_dir).select("epoch").distinct().collect()
-    }
-    epochs = sorted(per_epoch)
-    assert len(epochs) == 2
-    assert "late_role" not in per_epoch[epochs[0]]
-    assert "late_role" in per_epoch[epochs[1]]
-
-    # and nothing is lost: merged == batch over the union
-    union = on_time.unionByName(late)
-    merged = {
-        (r.role, r.bucket): r.n
-        for r in merged_histogram(spark, hist_dir).collect()
-    }
-    batch = {
-        (r.role, r.bucket): r.n
-        for r in int_histogram(
-            union.select("role", F.expr("length(text)").cast("long").alias("_m")),
-            "_m",
-            ["role"],
-        ).collect()
-    }
-    assert merged == batch
-
-
 def test_windowed_turn_counts_drops_beyond_watermark(spark, tmp_path):
     """The watermark BOUND on the event-time surface: with a 10-minute
     watermark in append mode, a row arriving after the watermark has
     passed its 5-minute window is dropped from that window's final
-    count; the finalized window emits only the on-time rows. (Contrast
-    with stream_histograms above, whose processing-time epochs never
-    drop late rows.)"""
+    count; the finalized window emits only the on-time rows."""
     from record_linkage_spark.streaming.incremental import windowed_turn_counts
 
     inp = str(tmp_path / "in")
