@@ -40,24 +40,6 @@ def q_p1_missing_pct(spark, sf):
     )
 
 
-def q_p2_notnull_filter(spark, sf):
-    """P2: na.drop on critical columns (process_raw.py:62-67)."""
-    d = _t(spark, sf, "documents")
-    return d.filter(
-        F.col("text").isNotNull() & F.col("lang").isNotNull()
-    ).select("doc_id", "lang", "n_chars")
-
-
-def q_p4_rename_project(spark, sf):
-    """P4/P5: rename to mediated schema + fixed projection."""
-    c = _t(spark, sf, "customer")
-    return c.select(
-        F.col("c_custkey").alias("id"),
-        F.col("c_name").alias("name"),
-        F.col("c_mktsegment").alias("segment"),
-    )
-
-
 def q_p8_norm_text(spark, sf):
     """P8: text normalization chain (mediated_schema.py:80-102)."""
     from record_linkage_spark.functions.text import norm_text
@@ -111,57 +93,6 @@ def q_p18_checksum(spark, sf):
     return d.select(
         "doc_id", F.pmod(total, F.lit(10)).cast("int").alias("check_digit")
     )
-
-
-def q_p11_canon_map(spark, sf):
-    """P11: small canonicalization map as when/otherwise chain
-    (mediated_schema.py:183-187)."""
-    d = _t(spark, sf, "documents")
-    canon = (
-        F.when(F.col("lang") == "en", "english")
-        .when(F.col("lang") == "de", "german")
-        .when(F.col("lang") == "fr", "french")
-        .otherwise(F.col("lang"))
-    )
-    return d.select("doc_id", canon.alias("lang_canon"))
-
-
-def q_f8_date_parse(spark, sf):
-    """F8: to_timestamp / date arithmetic (NULL on failure semantics)."""
-    o = _t(spark, sf, "orders")
-    ts = F.to_timestamp(F.col("o_orderdate").cast("string"))
-    return o.select(
-        "o_orderkey",
-        F.year(ts).cast("int").alias("yr"),
-        F.month(ts).cast("int").alias("mo"),
-        F.date_format(ts, "yyyy-MM").alias("ym"),
-    )
-
-
-def q_p21_serialize(spark, sf):
-    """P21: Ditto-style record serialization as one concat_ws expression
-    (ditto_format.py:55-74)."""
-    from record_linkage_spark.functions.text import serialize_record
-
-    c = _t(spark, sf, "customer")
-    ser = serialize_record(
-        [
-            ("name", F.col("c_name")),
-            ("segment", F.col("c_mktsegment")),
-            ("nation", F.col("c_nationkey")),
-        ]
-    )
-    return c.select("c_custkey", ser.alias("serialized"))
-
-
-def q_f12_field_diff(spark, sf):
-    """F12: null-safe count of differing fields between paired rows
-    (ground_truth.py:115-124)."""
-    from record_linkage_spark.functions.comparators import field_diff_count
-
-    pairs = q_j3_hydrate_pairs(spark, sf)
-    diff = field_diff_count([("name_A", "name_B"), ("bal_A", "bal_B")])
-    return pairs.select("id_A", "id_B", diff.cast("int").alias("n_diff"))
 
 
 def q_m9_top_idf_tokens(spark, sf):
@@ -413,19 +344,6 @@ def q_a8_doc_freq(spark, sf):
 # W: windows / sorts / limits
 # --------------------------------------------------------------------------
 
-def q_w2_latest_per_group(spark, sf):
-    """W1/W2: representative-per-cluster = newest row per key via
-    row_number (ground_truth.py:104-144)."""
-    o = _t(spark, sf, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.desc("o_orderdate"), F.desc("o_orderkey")
-    )
-    return (
-        o.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("o_custkey", "o_orderkey", "o_orderstatus")
-    )
-
 
 def q_w4_hash_quota(spark, sf):
     """W4/X3: deterministic quota sampling by md5 ranking (portable
@@ -573,19 +491,6 @@ def q_f1_jaro_winkler(spark, sf):
     )
 
 
-def q_f2_levenshtein(spark, sf):
-    """F2: Levenshtein distance + normalized similarity (JVM built-in)."""
-    from record_linkage_spark.functions.similarity import levenshtein_sim
-
-    p = _name_pairs(spark, sf)
-    return p.select(
-        "c_custkey",
-        "s_suppkey",
-        F.levenshtein("c_name", "s_name").cast("bigint").alias("lev"),
-        F.round(levenshtein_sim("c_name", "s_name"), 6).alias("lev_sim"),
-    )
-
-
 def q_f4_gauss_comparator(spark, sf):
     """F4: recordlinkage-style gaussian numeric comparator."""
     from record_linkage_spark.functions.comparators import gauss_sim
@@ -706,21 +611,6 @@ def q_ann_brute_topk(spark, sf):
     )
 
 
-def q_text_token_counts(spark, sf):
-    """Whitespace + BPE-ish token counting."""
-    from record_linkage_spark.operators.text_analysis import (
-        token_count_bpe_ish,
-        token_count_ws,
-    )
-
-    d = _t(spark, sf, "documents")
-    return d.select(
-        "doc_id",
-        token_count_ws("text").cast("bigint").alias("n_ws"),
-        token_count_bpe_ish("text").cast("bigint").alias("n_bpe"),
-    )
-
-
 def q_text_quality(spark, sf):
     """Quality scoring features + composite score."""
     from record_linkage_spark.operators.text_analysis import quality_features
@@ -734,14 +624,6 @@ def q_text_quality(spark, sf):
         F.round("q_alpha_ratio", 6).alias("alpha_ratio"),
         F.round("q_score", 6).alias("q_score"),
     )
-
-
-def q_text_langid(spark, sf):
-    """Stopword-profile language ID."""
-    from record_linkage_spark.operators.text_analysis import language_id
-
-    d = _t(spark, sf, "documents")
-    return d.select("doc_id", language_id("text").alias("lang_pred"))
 
 
 # --------------------------------------------------------------------------
@@ -787,22 +669,6 @@ def q_rl_ground_truth(spark, sf):
 
     profiles, keys = _synth_profiles_keys(spark)
     return build_ground_truth(profiles, keys)
-
-
-def q_rl_candidates(spark, sf):
-    """Salted blocking self-join candidate generation (B1 cascade)."""
-    from record_linkage_spark.operators.blocking import candidate_pairs
-
-    profiles, _ = _synth_profiles_keys(spark)
-    return candidate_pairs(profiles, "B1")
-
-
-def q_rl_candidates_b2(spark, sf):
-    """B2 cascade candidates (tighter: + last3 + JW(last) + exact tool)."""
-    from record_linkage_spark.operators.blocking import candidate_pairs
-
-    profiles, _ = _synth_profiles_keys(spark)
-    return candidate_pairs(profiles, "B2")
 
 
 def q_rl_one_to_one(spark, sf):
@@ -1055,54 +921,6 @@ def q_rl_hac_clusters(spark, sf):
     )
 
 
-def q_c4_filters(spark, sf):
-    """C4 rule cascade (Raffel et al. 2020 §2.2: line filter + doc
-    rules) over a deterministic multi-line corpus derived from
-    documents: line 1 is a 40-char slice with a terminal period, line 2
-    an unpunctuated slice (line-filtered away), then doc_id%6 more good
-    lines, plus planted blocklist / code-brace / lorem lines on doc_id
-    multiples of 17/23/29. DuckDB replays the corpus construction AND
-    every rule (list_filter lambda, regex word count, sentence-mark
-    proxy) from scratch; kept_text compares as md5."""
-    from record_linkage_spark.operators.web_filters import c4_filters
-
-    d = _t(spark, sf, "documents").select("doc_id", "text")
-    d2 = d.withColumn(
-        "_g", F.concat(F.substring("text", 1, 40), F.lit("."))
-    ).withColumn("_k", (F.col("doc_id") % 6).cast("int"))
-    text2 = F.when(
-        F.col("text").isNotNull(),
-        F.concat(
-            F.col("_g"),
-            F.lit("\n"),
-            F.substring("text", 45, 10),
-            F.expr("repeat(concat('\\n', _g), _k)"),
-            F.when(
-                F.col("doc_id") % 17 == 0,
-                F.lit("\nClick here to subscribe today."),
-            ).otherwise(F.lit("")),
-            F.when(
-                F.col("doc_id") % 23 == 0, F.lit("\nvar x = {1};")
-            ).otherwise(F.lit("")),
-            F.when(
-                F.col("doc_id") % 29 == 0, F.lit("\nLorem Ipsum dolor sit.")
-            ).otherwise(F.lit("")),
-        ),
-    )
-    ann = c4_filters(d2.select("doc_id", text2.alias("text")))
-    return ann.select(
-        "doc_id",
-        F.md5(F.coalesce("kept_text", F.lit(""))).alias("kept_md5"),
-        "n_lines",
-        "n_kept_lines",
-        "n_sentences",
-        F.col("has_blocked").cast("int").alias("blocked"),
-        F.col("has_lorem").cast("int").alias("lorem"),
-        F.col("has_brace").cast("int").alias("brace"),
-        F.col("keep").cast("int").alias("keep"),
-    )
-
-
 def q_pq_adc(spark, sf):
     """Product-quantization ADC top-10 in the fully replayable
     configuration (portable md5 init order, iterations=0 so the codebook
@@ -1149,50 +967,6 @@ def q_explain_pairs(spark, sf):
     model = LinearModel(weights=_FLAGSHIP_WEIGHTS, intercept=-6.0, threshold=0.5)
     return explain_pairs(feats, model, top_k=5).withColumn(
         "score", F.round("score", 6)
-    )
-
-
-def q_gopher_filters(spark, sf):
-    """Gopher quality rules (Rae et al. 2021 A1.1) over documents with
-    planted rule violations: '#' runs on doc_id%13, bullet lines on %19,
-    ellipsis line endings on %11, and stop-phrase padding on evens so the
-    stop-word rule splits the corpus. DuckDB replays every metric (word/
-    line list lambdas, length-difference symbol counts, stop-word hits)
-    and the final verdict from scratch."""
-    from record_linkage_spark.operators.web_filters import gopher_filters
-
-    d = _t(spark, sf, "documents").select("doc_id", "text")
-    text2 = F.when(
-        F.col("text").isNotNull(),
-        F.concat(
-            F.when(
-                F.col("doc_id") % 19 == 0,
-                F.lit("• alpha beta gamma\n- delta epsilon zeta\n"),
-            ).otherwise(F.lit("")),
-            F.col("text"),
-            F.when(
-                F.col("doc_id") % 2 == 0, F.lit(" and that have with")
-            ).otherwise(F.lit("")),
-            F.when(F.col("doc_id") % 13 == 0, F.lit(" #####")).otherwise(
-                F.lit("")
-            ),
-            F.when(
-                F.col("doc_id") % 11 == 0,
-                F.lit("\nto be continued...\nand more soon..."),
-            ).otherwise(F.lit("")),
-        ),
-    )
-    ann = gopher_filters(d.select("doc_id", text2.alias("text")), min_words=20)
-    return ann.select(
-        "doc_id",
-        "n_words",
-        "mean_word_len",
-        "symbol_word_ratio",
-        "bullet_line_frac",
-        "ellipsis_line_frac",
-        "alpha_word_frac",
-        "n_stop_hits",
-        F.col("keep").cast("int").alias("keep"),
     )
 
 
@@ -1321,18 +1095,6 @@ def q_rl_streaming_rollup(spark, sf):
     return spark.read.option("basePath", out_dir).parquet(out_dir).select(
         "conv_id", "n_turns", "n_tokens", "first_role"
     )
-
-
-def q_rl_multimodal_features(spark, sf):
-    """Binary media payloads -> mapInPandas batch feature extraction."""
-    from record_linkage_spark.operators.multimodal import (
-        extract_media_features,
-        synthesize_media,
-    )
-
-    media = synthesize_media(spark, n=200)
-    out = extract_media_features(media)
-    return out.select("media_id", "kind", "n_bytes")
 
 
 def q_rl_fingerprint(spark, sf):
@@ -1639,52 +1401,6 @@ def q_rl_group_linkage(spark, sf):
         "n_matched",
         F.round("match_weight", 6).alias("match_weight"),
         F.round("sim", 6).alias("sim"),
-    )
-
-
-def q_lm_entropy(spark, sf):
-    """CCNet-style bigram-LM cross-entropy over documents ∪ planted
-    token-REVERSED copies (same vocabulary, destroyed word order — a
-    bigram LM must score them strictly worse). Self-trained LM; the
-    DuckDB twin replays tokenize -> BOS pad -> bigram counts ->
-    add-alpha smoothing -> per-doc -avg log2 p end to end."""
-    from record_linkage_spark.operators.lm_quality import lm_cross_entropy
-    from record_linkage_spark.operators.text_analysis import _tokens
-
-    d = _t(spark, sf, "documents").filter(F.col("text").isNotNull())
-    shuffled = d.filter(F.col("doc_id") < 40).select(
-        (F.col("doc_id") + F.lit(7_000_000)).alias("doc_id"),
-        F.concat_ws(" ", F.reverse(_tokens(F.col("text")))).alias("text"),
-    )
-    docs = d.select("doc_id", "text").unionByName(shuffled)
-    return lm_cross_entropy(docs).select(
-        "doc_id",
-        "n_bigrams",
-        F.round("cross_entropy", 6).alias("cross_entropy"),
-    )
-
-
-def q_dsir_select(spark, sf):
-    """DSIR importance resampling (Xie et al. NeurIPS 2023): target =
-    every 5th document (a 'domain' slice); hashed unigram+bigram
-    distributions for target and pool, per-doc log importance ratio,
-    hash-seeded Gumbel-top-50. The DuckDB twin replays features, both
-    smoothed distributions, the weights, the Gumbel keys and the
-    bounded top-k."""
-    from record_linkage_spark.operators.dsir import dsir_resample
-
-    d = (
-        _t(spark, sf, "documents")
-        .filter(F.col("text").isNotNull())
-        .select("doc_id", "text")
-    )
-    tgt = d.filter(F.col("doc_id") % 5 == 0)
-    out = dsir_resample(d, tgt, k=50, buckets=256, portable=True)
-    return out.select(
-        "doc_id",
-        "n_feats",
-        F.round("log_w", 6).alias("log_w"),
-        F.round("gumbel_key", 6).alias("gumbel_key"),
     )
 
 
@@ -2319,49 +2035,6 @@ def q_blocking_b2(spark, sf):
     return candidate_pairs(_doc_profiles(spark, sf), "B2", salt_target=3)
 
 
-def q_curation_funnel(spark, sf):
-    """The FULL corpus-curation funnel (``plans/curate.py``) as one
-    value-checked composition: PII scrub -> quality/repetition/langid
-    signals -> threshold filter -> exact dedup -> MinHash-LSH near-dup
-    at tau=1.0 (deterministic, see ``minhash_exactset``) -> benchmark
-    8-gram decontamination. Planted messy copies exercise the dedup leg;
-    the benchmark slice exercises the decontamination leg. DuckDB replays
-    every stage from scratch over the same base table, so the survivor
-    set (and its lang / token-count / quality columns) is an end-to-end
-    external check of the whole training-data hygiene pipeline."""
-    from record_linkage_spark.operators.curation import scrub_pii
-    from record_linkage_spark.plans.curate import (
-        apply_quality_filter,
-        dedup_corpus,
-        remove_contaminated,
-        signals_table,
-    )
-
-    d = _t(spark, sf, "documents").filter(F.col("text").isNotNull()).select(
-        "doc_id", "text"
-    )
-    docs = d.unionByName(_messy_copies(d))
-    scrubbed = docs.select("doc_id", scrub_pii("text").alias("text"))
-    # filtered feeds four consumers (exact drop, its anti-join, minhash,
-    # decontam corpus) — checkpoint the boundary so the scan+signals
-    # subtree runs once, not per consumer (the warehouse pipeline gets
-    # this for free from its stage tables)
-    filtered = apply_quality_filter(signals_table(scrubbed)).localCheckpoint()
-    kept = remove_contaminated(
-        dedup_corpus(filtered, minhash_threshold=1.0),
-        d.filter(F.col("doc_id") < 26).select(
-            F.substring("text", 20, 150).alias("text")
-        ),
-        ngram=8,
-    )
-    return kept.select(
-        "doc_id",
-        "lang",
-        F.col("n_tokens").cast("bigint").alias("n_tokens"),
-        F.round("q_score", 6).alias("q_score"),
-    )
-
-
 # --------------------------------------------------------------------------
 # composite checks: several small SURVEY ops folded into one contract slot
 # (the driver verifies the first 50 queries() entries — composites keep
@@ -2547,159 +2220,6 @@ def q_near_dup_pairs(spark, sf):
         F.col("keep").cast("bigint").alias("i2"),
     )
     return mh.unionByName(sh).unionByName(sd)
-
-
-def q_web_filters(spark, sf):
-    """Web-corpus quality-filter composite, union-tagged into one
-    (kind, doc_id, sval, i1-i3, f1-f5, keep) frame with every metric
-    of each standalone check verbatim:
-
-      kind='c4'      C4 rule cascade (``q_c4_filters``)
-      kind='gopher'  Gopher quality rules (``q_gopher_filters``)
-      kind='lm'      CCNet-style bigram-LM cross-entropy
-                     (``q_lm_entropy``: i1=n_bigrams, f1=cross_entropy)
-      kind='dsir'    DSIR importance resampling
-                     (``q_dsir_select``: i1=n_feats, f1=log_w,
-                     f2=gumbel_key)
-    """
-    c4 = q_c4_filters(spark, sf).select(
-        F.lit("c4").alias("kind"),
-        "doc_id",
-        F.col("kept_md5").alias("sval"),
-        F.col("n_lines").alias("i1"),
-        F.col("n_kept_lines").alias("i2"),
-        F.col("n_sentences").alias("i3"),
-        F.col("blocked").cast("double").alias("f1"),
-        F.col("lorem").cast("double").alias("f2"),
-        F.col("brace").cast("double").alias("f3"),
-        F.lit(0.0).alias("f4"),
-        F.lit(0.0).alias("f5"),
-        "keep",
-    )
-    go = q_gopher_filters(spark, sf).select(
-        F.lit("gopher").alias("kind"),
-        "doc_id",
-        F.lit("").alias("sval"),
-        F.col("n_words").alias("i1"),
-        F.col("n_stop_hits").alias("i2"),
-        F.lit(0).cast("int").alias("i3"),
-        F.col("mean_word_len").alias("f1"),
-        F.col("symbol_word_ratio").alias("f2"),
-        F.col("bullet_line_frac").alias("f3"),
-        F.col("ellipsis_line_frac").alias("f4"),
-        F.col("alpha_word_frac").alias("f5"),
-        "keep",
-    )
-    zi = F.lit(0).cast("int")
-    zd = F.lit(0.0)
-    lm = q_lm_entropy(spark, sf).select(
-        F.lit("lm").alias("kind"),
-        "doc_id",
-        F.lit("").alias("sval"),
-        F.col("n_bigrams").cast("int").alias("i1"),
-        zi.alias("i2"),
-        zi.alias("i3"),
-        F.col("cross_entropy").alias("f1"),
-        zd.alias("f2"),
-        zd.alias("f3"),
-        zd.alias("f4"),
-        zd.alias("f5"),
-        zi.alias("keep"),
-    )
-    ds = q_dsir_select(spark, sf).select(
-        F.lit("dsir").alias("kind"),
-        "doc_id",
-        F.lit("").alias("sval"),
-        F.col("n_feats").cast("int").alias("i1"),
-        zi.alias("i2"),
-        zi.alias("i3"),
-        F.col("log_w").alias("f1"),
-        F.col("gumbel_key").alias("f2"),
-        zd.alias("f3"),
-        zd.alias("f4"),
-        zd.alias("f5"),
-        F.lit(1).cast("int").alias("keep"),
-    )
-    from record_linkage_spark.operators.web_filters import blocklist_filter
-
-    bl = blocklist_filter(
-        _t(spark, sf, "documents").select("doc_id", "text"),
-        ["lorem", "ipsum", "the", "click"],
-    ).select(
-        F.lit("blocklist").alias("kind"),
-        "doc_id",
-        F.lit("").alias("sval"),
-        F.col("n_blocklist_hits").cast("int").alias("i1"),
-        zi.alias("i2"),
-        zi.alias("i3"),
-        zd.alias("f1"),
-        zd.alias("f2"),
-        zd.alias("f3"),
-        zd.alias("f4"),
-        zd.alias("f5"),
-        F.col("keep").cast("int").alias("keep"),
-    )
-    url = _q_url_rows(spark, sf, zi, zd)
-    return (
-        c4.unionByName(go).unionByName(lm).unionByName(ds).unionByName(bl)
-        .unionByName(url)
-    )
-
-
-def _messy_url(d):
-    """Deterministic messy URL per doc_id — upper-case scheme/host, www
-    and :80 variants, duplicate-slash paths, tracking params, fragments,
-    and a malformed leg (doc_id % 13 == 0) — built identically by the
-    DuckDB twin so the canonicalizer itself is what's value-checked."""
-    well = F.concat(
-        F.lit("HTTP://"),
-        F.when(d % 3 == 0, F.lit("WWW.")).otherwise(F.lit("")),
-        F.lit("Site"), (d % 37).cast("string"), F.lit(".Example.COM"),
-        F.when(d % 5 == 0, F.lit(":80")).otherwise(F.lit("")),
-        F.lit("/p"), (d % 11).cast("string"),
-        F.when(d % 4 == 0, F.lit("//x/"))
-        .when(d % 4 == 1, F.lit("/x"))
-        .otherwise(F.lit("")),
-        F.lit("?utm_source=t&b="), (d % 2).cast("string"), F.lit("&a=1"),
-        F.when(d % 7 == 0, F.lit("#frag")).otherwise(F.lit("")),
-    )
-    return F.when(d % 13 == 0, F.concat(F.lit("not a url "), d.cast("string"))).otherwise(well)
-
-
-def _q_url_rows(spark, sf, zi, zd):
-    """URL canonicalization + dedup legs of the web_filters composite
-    (``functions/urls.py``): kind='url' carries every doc's canonical
-    form (keep = parsed), kind='urldedup' the survivors of
-    one-per-canonical dedup under the (raw, doc_id) total order plus
-    all malformed rows."""
-    from record_linkage_spark.functions.urls import canonicalize_url, url_dedup
-
-    d = _t(spark, sf, "documents").select(
-        "doc_id", _messy_url(F.col("doc_id")).alias("raw_url")
-    )
-    canon = d.withColumn("c", canonicalize_url("raw_url"))
-    url = canon.select(
-        F.lit("url").alias("kind"),
-        "doc_id",
-        F.coalesce("c", F.lit("")).alias("sval"),
-        F.coalesce(F.length("c"), F.lit(0)).cast("int").alias("i1"),
-        zi.alias("i2"),
-        zi.alias("i3"),
-        zd.alias("f1"), zd.alias("f2"), zd.alias("f3"), zd.alias("f4"), zd.alias("f5"),
-        F.col("c").isNotNull().cast("int").alias("keep"),
-    )
-    kept = url_dedup(
-        d, "raw_url", order_by=[F.col("raw_url").asc(), F.col("doc_id").asc()]
-    )
-    dd = kept.select(
-        F.lit("urldedup").alias("kind"),
-        "doc_id",
-        F.coalesce("canonical_url", F.lit("")).alias("sval"),
-        zi.alias("i1"), zi.alias("i2"), zi.alias("i3"),
-        zd.alias("f1"), zd.alias("f2"), zd.alias("f3"), zd.alias("f4"), zd.alias("f5"),
-        F.lit(1).cast("int").alias("keep"),
-    )
-    return url.unionByName(dd)
 
 
 def q_bpe_pairs(spark, sf):
@@ -4430,13 +3950,13 @@ def q_rl_ann_candidates(spark, sf):
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Contract queries. ORDER MATTERS: the driver records a correctness
-    verdict for the first 50 entries, so the first 50 are all
-    oracle-backed (every one has a DuckDB twin in ``oracle_sql()``).
-    Near-free scalar checks are folded into composite entries
+    verdict for the first 50 entries, so every oracle-backed entry (one
+    with a DuckDB twin in ``oracle_sql()``) comes first, inside those 50
+    slots. Near-free scalar checks are folded into composite entries
     (``q_scalar_checks`` et al. — values carried verbatim, see their
     docstrings) so one slot carries several SURVEY.md §2 ops. Rows-only
     entries (xxhash/Arrow-kernel paths with no portable SQL twin, pinned
-    by pytest instead) sit after position 50."""
+    by pytest instead) follow the last oracle-backed entry."""
     return {
         # -- flagship compositions (blocking -> featurize -> score -> report)
         "scored_pairs_portable": q_scored_pairs_portable,
@@ -4445,7 +3965,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ann_blocking": q_ann_blocking,
         "cc_components": q_cc_components,
         "inc_components": q_inc_components,
-        "curation_funnel": q_curation_funnel,
         # -- P: projections / filters / per-row transforms
         "scalar_checks": q_scalar_checks,        # P1/A1 + P14 + J5 + A6 + X1
         "p2_p11_filter_canon": q_p2_p11_filter_canon,
@@ -4486,7 +4005,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ann_brute_topk": q_ann_brute_topk,
         "rl_embedding_neardup": q_rl_embedding_neardup,
         "doc_hygiene": q_doc_hygiene,      # PII + repetition + decontam
-        "web_filters": q_web_filters,      # C4 + Gopher + LM-perplexity + DSIR
         "transcript_checks": q_transcript_checks,  # integrity + prefix dups + reseg
         "agent_analytics": q_agent_analytics,  # loops + transitions + ngrams + drift + boilerplate
         "pack_budget": q_pack_budget,      # seq packing + token budget
@@ -4494,18 +4012,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "fp_winnow": q_fp_winnow,
         "text_stats": q_text_stats,              # token counts + quality + langid
         "event_windows": q_event_windows,        # tumbling + session windows
-        "rl_multimodal_features": q_rl_multimodal_features,
         "cluster_quality": q_cluster_quality,  # B-cubed + ARI family + cohesion/merge repair
-        # ---- position 51+: rows-only entries (hash-kernel / pipeline /
-        # streaming ops — no portable SQL twin; each pinned by pytest).
-        # EVERY oracle-backed entry sits inside the 50-slot window: the
-        # former standalone past-window oracles (span_dedup,
-        # semantic_dedup, soft_tfidf, lm_entropy, dsir_select,
-        # prefix_dups, the five agent-analytics checks, conv_reseg,
-        # corpus_profile) now ride verbatim inside window composites —
-        # see q_span_checks, q_near_dup_pairs, q_similarity_funcs,
-        # q_sn_progressive, q_web_filters, q_transcript_checks,
-        # q_agent_analytics, q_scalar_checks. ----
+        # ---- rows-only entries (hash-kernel / pipeline / streaming ops
+        # — no portable SQL twin; each pinned by pytest). EVERY
+        # oracle-backed entry sits before them, inside the 50-slot
+        # window: the former standalone past-window oracles (span_dedup,
+        # semantic_dedup, soft_tfidf, prefix_dups, the five
+        # agent-analytics checks, conv_reseg, corpus_profile) now ride
+        # verbatim inside window composites — see q_span_checks,
+        # q_near_dup_pairs, q_similarity_funcs, q_sn_progressive,
+        # q_transcript_checks, q_agent_analytics, q_scalar_checks. ----
         "rl_group_linkage": q_rl_group_linkage,
         "rl_profiles": q_rl_profiles,
         "rl_ground_truth": q_rl_ground_truth,
@@ -5389,99 +4905,6 @@ def _composite_oracles(base: dict[str, str]) -> dict[str, str]:
         f"UNION ALL SELECT * FROM ({mix_sql})"
     )
 
-    # messy-URL construction + canonicalization ladder shared by the two
-    # URL legs of web_filters (must mirror _messy_url / canonicalize_url)
-    url_raw_sql = (
-        "SELECT doc_id, CASE WHEN doc_id % 13 = 0 "
-        "THEN 'not a url ' || CAST(doc_id AS VARCHAR) "
-        "ELSE 'HTTP://' || CASE WHEN doc_id % 3 = 0 THEN 'WWW.' ELSE '' END "
-        "|| 'Site' || CAST(doc_id % 37 AS VARCHAR) || '.Example.COM' "
-        "|| CASE WHEN doc_id % 5 = 0 THEN ':80' ELSE '' END "
-        "|| '/p' || CAST(doc_id % 11 AS VARCHAR) "
-        "|| CASE WHEN doc_id % 4 = 0 THEN '//x/' "
-        "WHEN doc_id % 4 = 1 THEN '/x' ELSE '' END "
-        "|| '?utm_source=t&b=' || CAST(doc_id % 2 AS VARCHAR) || '&a=1' "
-        "|| CASE WHEN doc_id % 7 = 0 THEN '#frag' ELSE '' END "
-        "END AS raw_url FROM documents"
-    )
-    _u = "trim(raw_url)"
-    _scheme = f"lower(regexp_extract({_u}, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1))"
-    _auth = f"regexp_extract({_u}, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1)"
-    _host = (
-        "regexp_replace(regexp_replace(regexp_replace(regexp_replace("
-        f"lower({_auth}), '^[^@]*@', ''), ':[0-9]*$', ''), "
-        "'^www\\.', ''), '\\.$', '')"
-    )
-    _port = f"regexp_extract({_auth}, ':([0-9]+)$', 1)"
-    _path0 = f"regexp_extract({_u}, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^?#]*)', 1)"
-    _path1 = f"regexp_replace(regexp_replace({_path0}, '/{{2,}}', '/'), '(.)/$', '\\1')"
-    _path = f"CASE WHEN {_path1} = '' THEN '/' ELSE {_path1} END"
-    _q0 = f"regexp_extract({_u}, '\\?([^#]*)', 1)"
-    _kept = (
-        f"list_sort(list_filter(string_split({_q0}, '&'), "
-        "x -> x != '' AND NOT regexp_matches(x, "
-        "'^(utm_[a-z0-9_]*|gclid|fbclid|mc_cid|mc_eid|ref)=')))"
-    )
-    # DuckDB: array_to_string([]) is NULL where Spark's array_join is ''
-    _qs = f"coalesce(array_to_string({_kept}, '&'), '')"
-    _dflt = (
-        f"(({_scheme} = 'http' AND {_port} = '80') "
-        f"OR ({_scheme} = 'https' AND {_port} = '443'))"
-    )
-    _pp = f"CASE WHEN {_port} = '' OR {_dflt} THEN '' ELSE ':' || {_port} END"
-    url_canon_sql = (
-        f"CASE WHEN {_scheme} = '' OR {_host} = '' THEN NULL ELSE "
-        f"{_scheme} || '://' || {_host} || {_pp} || {_path} || "
-        f"CASE WHEN {_qs} = '' THEN '' ELSE '?' || {_qs} END END"
-    )
-
-    web_filters_sql = (
-        "SELECT 'c4' AS kind, doc_id, kept_md5 AS sval, "
-        "CAST(n_lines AS INTEGER) AS i1, CAST(n_kept_lines AS INTEGER) AS i2, "
-        "CAST(n_sentences AS INTEGER) AS i3, "
-        "CAST(blocked AS DOUBLE) AS f1, CAST(lorem AS DOUBLE) AS f2, "
-        "CAST(brace AS DOUBLE) AS f3, 0.0 AS f4, 0.0 AS f5, "
-        f"CAST(keep AS INTEGER) AS keep FROM ({base['c4_filters']}) "
-        "UNION ALL SELECT 'gopher', doc_id, '', "
-        "CAST(n_words AS INTEGER), CAST(n_stop_hits AS INTEGER), "
-        "CAST(0 AS INTEGER), mean_word_len, symbol_word_ratio, "
-        "bullet_line_frac, ellipsis_line_frac, alpha_word_frac, "
-        f"CAST(keep AS INTEGER) FROM ({base['gopher_filters']}) "
-        "UNION ALL SELECT 'lm', doc_id, '', "
-        "CAST(n_bigrams AS INTEGER), CAST(0 AS INTEGER), CAST(0 AS INTEGER), "
-        "cross_entropy, 0.0, 0.0, 0.0, 0.0, CAST(0 AS INTEGER) "
-        f"FROM ({base['lm_entropy']}) "
-        "UNION ALL SELECT 'dsir', doc_id, '', "
-        "CAST(n_feats AS INTEGER), CAST(0 AS INTEGER), CAST(0 AS INTEGER), "
-        "log_w, gumbel_key, 0.0, 0.0, 0.0, CAST(1 AS INTEGER) "
-        f"FROM ({base['dsir_select']}) "
-        # token blocklist: count of DISTINCT listed terms present
-        "UNION ALL SELECT 'blocklist', doc_id, '', "
-        "CAST(hits AS INTEGER), CAST(0 AS INTEGER), CAST(0 AS INTEGER), "
-        "0.0, 0.0, 0.0, 0.0, 0.0, CAST(hits = 0 AS INTEGER) FROM ("
-        "SELECT doc_id, CASE WHEN text IS NULL THEN NULL ELSE "
-        "len(list_filter(list_distinct(regexp_split_to_array(lower(text), '\\s+')), "
-        "x -> list_contains(['lorem', 'ipsum', 'the', 'click'], x))) END AS hits "
-        "FROM documents) "
-        # URL canonicalization (functions/urls.py): build the same messy
-        # URL per doc, replay the full RFC-3986 ladder (lower scheme/host,
-        # strip userinfo/www/default port/fragment, collapse path slashes,
-        # drop tracking params, byte-sort the rest), then the
-        # keep-one-per-canonical dedup under the (raw, doc_id) order
-        "UNION ALL SELECT 'url', doc_id, coalesce(c, ''), "
-        "CAST(coalesce(length(c), 0) AS INTEGER), CAST(0 AS INTEGER), "
-        "CAST(0 AS INTEGER), 0.0, 0.0, 0.0, 0.0, 0.0, "
-        "CAST(c IS NOT NULL AS INTEGER) FROM ("
-        f"SELECT doc_id, {url_canon_sql} AS c FROM ({url_raw_sql})) "
-        "UNION ALL SELECT 'urldedup', doc_id, coalesce(c, ''), "
-        "CAST(0 AS INTEGER), CAST(0 AS INTEGER), CAST(0 AS INTEGER), "
-        "0.0, 0.0, 0.0, 0.0, 0.0, CAST(1 AS INTEGER) FROM ("
-        "SELECT doc_id, c, row_number() OVER ("
-        "PARTITION BY c ORDER BY raw_url, doc_id) AS rn FROM ("
-        f"SELECT doc_id, raw_url, {url_canon_sql} AS c FROM ({url_raw_sql}))"
-        ") WHERE c IS NULL OR rn = 1"
-    )
-
     transcript_checks_sql = (
         "SELECT 'integrity' AS kind, conv_id AS k1, '' AS k2, '' AS k3, "
         "n_turns AS i1, n_dup_idx AS i2, n_gaps AS i3, "
@@ -5551,7 +4974,6 @@ def _composite_oracles(base: dict[str, str]) -> dict[str, str]:
         "dedup_checks": dedup_checks_sql,
         "doc_hygiene": doc_hygiene_sql,
         "pack_budget": pack_budget_sql,
-        "web_filters": web_filters_sql,
         "sampling_checks": (
             f"SELECT 'hash_quota' AS kind, doc_id, lang FROM ({base['w4_hash_quota']}) "
             "UNION ALL "
@@ -5979,100 +5401,13 @@ def oracle_sql() -> dict[str, str]:
         "trim(regexp_replace(regexp_replace(lower(coalesce({c}, '')), "
         "'[^a-zàâäéèêëíìîïóòôöúùûüñß\\s]', ' ', 'g'), '\\s+', ' ', 'g'))"
     )
-    # ---- curation_funnel: the whole hygiene pipeline replayed in SQL ----
-    scrub_sql = (
-        "regexp_replace(regexp_replace(regexp_replace(regexp_replace({c}, "
-        "'[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{{2,}}', '<EMAIL>', 'g'), "
-        "'\\b\\d{{3}}-\\d{{2}}-\\d{{4}}\\b', '<ID>', 'g'), "
-        "'\\b\\d{{1,3}}\\.\\d{{1,3}}\\.\\d{{1,3}}\\.\\d{{1,3}}\\b', '<IP>', 'g'), "
-        "'\\+?\\d[\\d().-]{{7,}}\\d', '<PHONE>', 'g')"
-    )
     acc_norm = (
         "nullif(trim(regexp_replace(regexp_replace(lower(coalesce({c}, '')), "
         "'[^a-zàâäéèêëíìîïóòôöúùûüñß\\s]', ' ', 'g'), '\\s+', ' ', 'g')), '')"
     )
-    acc_toks = (
-        f"CASE WHEN {acc_norm} IS NULL THEN [] "
-        f"ELSE string_split({acc_norm}, ' ') END"
-    )
-    stop_en = "['the','and','of','to','in','is','that','for','with','was']"
-    lang_profiles = (
-        "(VALUES ('en', ['the','and','of','to','in','is','that','for','with','was']), "
-        "('de', ['der','die','und','das','ist','von','mit','den','nicht','ein']), "
-        "('fr', ['le','la','les','des','est','une','dans','que','pour','sur']), "
-        "('es', ['el','la','los','las','que','una','por','con','para','del']), "
-        "('it', ['il','la','che','di','una','per','con','del','non','sono']))"
-    )
     ws_toks = (
         "list_filter(string_split_regex(trim(lower(coalesce({c}, ''))), '\\s+'), "
         "x -> x != '')"
-    )
-    grams8 = "list_distinct([array_to_string({t}[i:i+7], ' ') for i in range(1, len({t}) - 6)])"
-    curation_funnel_sql = (
-        f"WITH all_docs AS ({messy_docs}), "
-        f"scrub AS (SELECT doc_id, {scrub_sql.format(c='text')} AS t FROM all_docs), "
-        "wt AS (SELECT doc_id, CASE WHEN trim(t) = '' THEN 0 "
-        "ELSE len(string_split_regex(trim(t), '\\s+')) END AS n_tokens FROM scrub), "
-        f"qt AS (SELECT doc_id, t, {acc_toks.format(c='t')} AS toks FROM scrub), "
-        "qm AS (SELECT doc_id, toks, length(t) AS n_chars, len(toks) AS qnt, "
-        f"len(list_filter(toks, x -> list_contains({stop_en}, x))) AS n_stop, "
-        "length(regexp_replace(t, '[^\\.,;:!\\?]', '', 'g')) AS n_punct, "
-        "length(regexp_replace(t, '[^A-Za-z]', '', 'g')) AS n_alpha FROM qt), "
-        "q AS (SELECT doc_id, toks, qnt, "
-        "CASE WHEN qnt > 0 THEN CAST(n_stop AS DOUBLE) / qnt ELSE 0.0 END AS sr, "
-        "CASE WHEN n_chars > 0 THEN CAST(n_punct AS DOUBLE) / n_chars ELSE 0.0 END AS pr, "
-        "CASE WHEN n_chars > 0 THEN CAST(n_alpha AS DOUBLE) / n_chars ELSE 0.0 END AS ar, "
-        "CASE WHEN qnt > 0 THEN CAST(n_alpha AS DOUBLE) / qnt ELSE 0.0 END AS mwl FROM qm), "
-        "qs AS (SELECT doc_id, toks, "
-        "(CAST(qnt >= 5 AND qnt <= 100000 AS DOUBLE) + CAST(sr >= 0.01 AS DOUBLE) "
-        "+ CAST(ar >= 0.5 AS DOUBLE) + CAST(mwl >= 2 AND mwl <= 12 AS DOUBLE) "
-        "+ CAST(pr <= 0.2 AS DOUBLE)) / 5.0 AS q_score FROM q), "
-        f"profiles(lang, words) AS {lang_profiles}, "
-        "lg AS (SELECT doc_id, CASE WHEN h > 0 THEN lang ELSE 'und' END AS lang FROM ("
-        "SELECT doc_id, lang, h, row_number() OVER (PARTITION BY doc_id "
-        "ORDER BY h DESC, lang DESC) AS rn FROM ("
-        "SELECT q.doc_id, p.lang, len(list_intersect(list_distinct(q.toks), p.words)) AS h "
-        "FROM qs q CROSS JOIN profiles p)) WHERE rn = 1), "
-        "rep_pt AS (SELECT doc_id, tok, count(*) AS c FROM ("
-        f"SELECT doc_id, unnest({ws_toks.format(c='t')}) AS tok FROM scrub) "
-        "GROUP BY 1, 2), "
-        "rep_ts AS (SELECT doc_id, sum(c) AS nt, max(c) AS top FROM rep_pt GROUP BY 1), "
-        "rep_sg AS (SELECT doc_id, list_filter(list_transform("
-        "string_split(lower(t), '.'), s -> trim(s)), s -> s != '') AS segs FROM scrub), "
-        "rep AS (SELECT sg.doc_id, "
-        "round(top / CAST(nt AS DOUBLE), 6) AS ttf, "
-        "CASE WHEN len(segs) > 0 THEN round(1.0 - len(list_distinct(segs)) / "
-        "CAST(len(segs) AS DOUBLE), 6) ELSE 0.0 END AS dlf "
-        "FROM rep_sg sg JOIN rep_ts ts ON sg.doc_id = ts.doc_id), "
-        "filt AS (SELECT w.doc_id FROM wt w JOIN qs ON w.doc_id = qs.doc_id "
-        "LEFT JOIN rep ON w.doc_id = rep.doc_id "
-        "WHERE qs.q_score >= 0.4 AND w.n_tokens >= 5 AND w.n_tokens <= 100000 "
-        "AND coalesce(rep.ttf, 0.0) <= 0.30 AND coalesce(rep.dlf, 0.0) <= 0.50), "
-        f"exn AS (SELECT f.doc_id, {NORM_URL_SQL.format(c='s.t')} AS norm "
-        "FROM filt f JOIN scrub s ON f.doc_id = s.doc_id), "
-        "ek AS (SELECT doc_id FROM (SELECT doc_id, min(doc_id) OVER ("
-        "PARTITION BY md5(coalesce(norm, ''))) AS m FROM exn) WHERE doc_id = m), "
-        "ndt AS (SELECT e.doc_id, string_split(x.norm, ' ') AS t "
-        "FROM ek e JOIN exn x ON e.doc_id = x.doc_id WHERE x.norm IS NOT NULL), "
-        "g AS (SELECT doc_id, md5(array_to_string(list_sort(list_distinct("
-        "[array_to_string(t[i:i+2], ' ') for i in range(1, len(t) - 1)])), chr(30))) AS k "
-        "FROM ndt WHERE len(t) >= 3), "
-        "ndrop AS (SELECT doc_id FROM (SELECT doc_id, min(doc_id) OVER ("
-        "PARTITION BY k) AS m FROM g) WHERE doc_id != m), "
-        "nk AS (SELECT doc_id FROM ek WHERE doc_id NOT IN (SELECT doc_id FROM ndrop)), "
-        f"ct AS (SELECT nk.doc_id, {ws_toks.format(c='s.t')} AS t "
-        "FROM nk JOIN scrub s ON nk.doc_id = s.doc_id), "
-        f"cg AS (SELECT doc_id, unnest({grams8.format(t='t')}) AS gram FROM ct), "
-        "bench AS (SELECT "
-        + ws_toks.format(c="substr(text, 20, 150)")
-        + " AS t FROM documents WHERE text IS NOT NULL AND doc_id < 26), "
-        f"bg AS (SELECT DISTINCT unnest({grams8.format(t='t')}) AS gram FROM bench), "
-        "flag AS (SELECT DISTINCT cg.doc_id FROM cg JOIN bg ON cg.gram = bg.gram) "
-        "SELECT nk.doc_id, lg.lang, CAST(wt.n_tokens AS BIGINT) AS n_tokens, "
-        "round(qs.q_score, 6) AS q_score "
-        "FROM nk JOIN lg ON nk.doc_id = lg.doc_id "
-        "JOIN wt ON nk.doc_id = wt.doc_id JOIN qs ON nk.doc_id = qs.doc_id "
-        "WHERE nk.doc_id NOT IN (SELECT doc_id FROM flag)"
     )
     ngram_topk_sql = (
         "WITH all_docs AS (SELECT doc_id, text FROM documents WHERE text IS NOT NULL "
@@ -6312,7 +5647,6 @@ def oracle_sql() -> dict[str, str]:
         "ELSE CAST(0.0 AS DOUBLE) END]) AS v FROM tout"
     )
     out = {
-        "curation_funnel": curation_funnel_sql,
         "blocking_b1": blocking_b1_sql,
         "blocking_b2": blocking_b2_sql,
         "cluster_quality": cluster_quality_sql,
@@ -6330,13 +5664,6 @@ def oracle_sql() -> dict[str, str]:
             "round(avg(CASE WHEN lang IS NULL THEN 1.0 ELSE 0.0 END), 6) AS null_lang, "
             "round(avg(CASE WHEN source IS NULL THEN 1.0 ELSE 0.0 END), 6) AS null_source "
             "FROM documents"
-        ),
-        "p2_notnull_filter": (
-            "SELECT doc_id, lang, n_chars FROM documents "
-            "WHERE text IS NOT NULL AND lang IS NOT NULL"
-        ),
-        "p4_rename_project": (
-            "SELECT c_custkey AS id, c_name AS name, c_mktsegment AS segment FROM customer"
         ),
         "p8_norm_text": (
             "SELECT doc_id, " + NORM_SQL.format(c="text") + " AS norm FROM documents"
@@ -6365,42 +5692,6 @@ def oracle_sql() -> dict[str, str]:
             " + 7*CAST(substring(lpad(CAST(doc_id AS VARCHAR), 8, '0'), 7, 1) AS INTEGER)"
             " + 3*CAST(substring(lpad(CAST(doc_id AS VARCHAR), 8, '0'), 8, 1) AS INTEGER)"
             ") % 10 AS INTEGER) AS check_digit FROM documents"
-        ),
-        "p11_canon_map": (
-            "SELECT doc_id, CASE WHEN lang = 'en' THEN 'english' "
-            "WHEN lang = 'de' THEN 'german' WHEN lang = 'fr' THEN 'french' "
-            "ELSE lang END AS lang_canon FROM documents"
-        ),
-        "f8_date_parse": (
-            "SELECT o_orderkey, "
-            "CAST(year(CAST(o_orderdate AS TIMESTAMP)) AS INTEGER) AS yr, "
-            "CAST(month(CAST(o_orderdate AS TIMESTAMP)) AS INTEGER) AS mo, "
-            "strftime(CAST(o_orderdate AS TIMESTAMP), '%Y-%m') AS ym "
-            "FROM orders"
-        ),
-        "p21_serialize": (
-            "SELECT c_custkey, concat_ws(' ', "
-            "CASE WHEN c_name IS NOT NULL THEN 'COL name VAL ' || c_name END, "
-            "CASE WHEN c_mktsegment IS NOT NULL THEN 'COL segment VAL ' || c_mktsegment END, "
-            "CASE WHEN c_nationkey IS NOT NULL THEN 'COL nation VAL ' || CAST(c_nationkey AS VARCHAR) END"
-            ") AS serialized FROM customer"
-        ),
-        "f12_field_diff": (
-            "WITH pairs AS ("
-            "SELECT id_A, id_B, ca.c_name AS name_A, cb.c_name AS name_B, "
-            "round(ca.c_acctbal, 2) AS bal_A, round(cb.c_acctbal, 2) AS bal_B "
-            "FROM (SELECT id_A, id_B FROM ("
-            "SELECT a.c_custkey AS id_A, b.c_custkey AS id_B, "
-            "row_number() OVER (PARTITION BY a.c_nationkey, a.c_mktsegment "
-            "ORDER BY a.c_custkey, b.c_custkey) AS rn "
-            "FROM customer a JOIN customer b "
-            "ON a.c_nationkey = b.c_nationkey AND a.c_mktsegment = b.c_mktsegment "
-            "WHERE a.c_custkey < b.c_custkey) WHERE rn <= 10) p "
-            "JOIN customer ca ON p.id_A = ca.c_custkey "
-            "JOIN customer cb ON p.id_B = cb.c_custkey) "
-            "SELECT id_A, id_B, CAST("
-            "CAST(name_A IS DISTINCT FROM name_B AS INTEGER) + "
-            "CAST(bal_A IS DISTINCT FROM bal_B AS INTEGER) AS INTEGER) AS n_diff FROM pairs"
         ),
         "m9_top_idf_tokens": (
             "WITH toks AS (SELECT doc_id, unnest(list_distinct("
@@ -6523,11 +5814,6 @@ def oracle_sql() -> dict[str, str]:
             "SELECT unnest(list_distinct(string_split(lower(coalesce(text, '')), ' '))) AS token "
             "FROM documents) WHERE token != '' GROUP BY token"
         ),
-        "w2_latest_per_group": (
-            "SELECT o_custkey, o_orderkey, o_orderstatus FROM ("
-            "SELECT *, row_number() OVER (PARTITION BY o_custkey "
-            "ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn FROM orders) WHERE rn = 1"
-        ),
         "w4_hash_quota": (
             "SELECT doc_id, lang FROM documents "
             "ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id LIMIT 50"
@@ -6556,13 +5842,6 @@ def oracle_sql() -> dict[str, str]:
         ),
         "f1_jaro_winkler": (
             f"SELECT c_custkey, s_suppkey, round(jaro_winkler_similarity(c_name, s_name), 6) AS jw "
-            f"FROM ({name_pairs})"
-        ),
-        "f2_levenshtein": (
-            f"SELECT c_custkey, s_suppkey, CAST(levenshtein(c_name, s_name) AS BIGINT) AS lev, "
-            f"round(CASE WHEN c_name IS NULL OR s_name IS NULL "
-            f"OR greatest(length(c_name), length(s_name)) = 0 THEN 0.0 "
-            f"ELSE 1.0 - levenshtein(c_name, s_name) / CAST(greatest(length(c_name), length(s_name)) AS DOUBLE) END, 6) AS lev_sim "
             f"FROM ({name_pairs})"
         ),
         "f4_gauss_comparator": (
@@ -6838,13 +6117,6 @@ def oracle_sql() -> dict[str, str]:
             "FROM al a JOIN al b ON a.vec_id < b.vec_id "
             "WHERE list_cosine_similarity(a.v, b.v) >= 0.99"
         ),
-        # mapInPandas batch plumbing: recompute every row's payload length
-        # from the synthesis rule ('payload-' || md5(id), utf-8)
-        "rl_multimodal_features": (
-            "SELECT CAST(i AS BIGINT) AS media_id, 'image' AS kind, "
-            "CAST(length('payload-' || md5(CAST(i AS VARCHAR))) AS INTEGER) AS n_bytes "
-            "FROM range(0, 200) t(i)"
-        ),
         # PII redaction: identical RE2 patterns replayed with 'g'
         "pii_scrub": (
             "WITH all_docs AS ("
@@ -7039,172 +6311,6 @@ def oracle_sql() -> dict[str, str]:
             "FROM pairs p "
             "LEFT JOIN ab ON ab.id_A = p.id_A AND ab.id_B = p.id_B "
             "LEFT JOIN ba ON ba.id_A = p.id_A AND ba.id_B = p.id_B"
-        ),
-        # bigram-LM cross-entropy: tokenize -> BOS pad -> bigram/left-
-        # context counts -> add-0.1 smoothing over V+1 -> -avg log2 p
-        "lm_entropy": (
-            "WITH all_docs AS ("
-            "SELECT doc_id, text FROM documents WHERE text IS NOT NULL "
-            "UNION ALL SELECT doc_id + 7000000 AS doc_id, "
-            "array_to_string(list_reverse(CASE WHEN " + ta_norm.format(c="text")
-            + " = '' THEN [] ELSE string_split(" + ta_norm.format(c="text")
-            + ", ' ') END), ' ') AS text "
-            "FROM documents WHERE text IS NOT NULL AND doc_id < 40), "
-            "nrm AS (SELECT doc_id, " + ta_norm.format(c="text") + " AS s "
-            "FROM all_docs), "
-            "tok AS (SELECT doc_id, CASE WHEN s = '' THEN [] "
-            "ELSE string_split(s, ' ') END AS t FROM nrm), "
-            "pad AS (SELECT doc_id, list_concat([chr(2)], t) AS t "
-            "FROM tok WHERE len(t) >= 1), "
-            "bg AS (SELECT doc_id, unnest(t[1:len(t)-1]) AS w1, "
-            "unnest(t[2:len(t)]) AS w2 FROM pad), "
-            "c2 AS (SELECT w1, w2, count(*) AS c2 FROM bg GROUP BY w1, w2), "
-            "c1 AS (SELECT w1, count(*) AS c1 FROM bg GROUP BY w1), "
-            "vv AS (SELECT CAST(count(DISTINCT w2) + 1 AS DOUBLE) AS v "
-            "FROM bg), "
-            "sc AS (SELECT doc_id, "
-            "(c2.c2 + 0.1) / (c1.c1 + 0.1 * (SELECT v FROM vv)) AS p "
-            "FROM bg JOIN c2 USING (w1, w2) JOIN c1 USING (w1)) "
-            "SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams, "
-            "round(-avg(log2(p)), 6) AS cross_entropy "
-            "FROM sc GROUP BY doc_id"
-        ),
-        # DSIR: hashed-ngram features -> smoothed target/pool
-        # distributions -> log importance ratio -> hash-seeded Gumbel
-        # keys -> bounded top-k; 1152921504606846976 = 16^15 = 2^60
-        "dsir_select": (
-            "WITH raw AS (SELECT doc_id, text FROM documents "
-            "WHERE text IS NOT NULL), "
-            "tok AS (SELECT doc_id, CASE WHEN s = '' THEN [] "
-            "ELSE string_split(s, ' ') END AS t FROM ("
-            "SELECT doc_id, " + ta_norm.format(c="text") + " AS s FROM raw)), "
-            "feats AS ("
-            "SELECT doc_id, unnest(t) AS g FROM tok "
-            "UNION ALL SELECT doc_id, w1 || ' ' || w2 AS g FROM ("
-            "SELECT doc_id, unnest(t[1:len(t)-1]) AS w1, "
-            "unnest(t[2:len(t)]) AS w2 FROM tok WHERE len(t) >= 2)), "
-            "cf AS (SELECT doc_id, "
-            "('0x' || substr(md5(g), 1, 15))::BIGINT % 256 AS bucket, "
-            "count(*) AS c FROM feats GROUP BY doc_id, "
-            "('0x' || substr(md5(g), 1, 15))::BIGINT % 256), "
-            "nr AS (SELECT bucket, sum(c) AS n FROM cf GROUP BY bucket), "
-            "nt AS (SELECT bucket, sum(c) AS n FROM cf "
-            "WHERE doc_id % 5 = 0 GROUP BY bucket), "
-            "totr AS (SELECT CAST(sum(c) AS DOUBLE) AS tot FROM cf), "
-            "tott AS (SELECT CAST(sum(c) AS DOUBLE) AS tot FROM cf "
-            "WHERE doc_id % 5 = 0), "
-            "ratio AS (SELECT b.range AS bucket, "
-            "ln((coalesce(nt.n, 0) + 0.5) / ((SELECT tot FROM tott) + 0.5 * 256)) "
-            "- ln((coalesce(nr.n, 0) + 0.5) / ((SELECT tot FROM totr) + 0.5 * 256)) "
-            "AS lrat FROM range(0, 256) b "
-            "LEFT JOIN nr ON nr.bucket = b.range "
-            "LEFT JOIN nt ON nt.bucket = b.range), "
-            "w AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_feats, "
-            "sum(c * lrat) AS log_w FROM cf JOIN ratio USING (bucket) "
-            "GROUP BY doc_id), "
-            "keyed AS (SELECT doc_id, n_feats, log_w, log_w - ln(-ln("
-            "((('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT "
-            "+ 0.5) / 1152921504606846976.0))) AS gk FROM w) "
-            "SELECT doc_id, n_feats, round(log_w, 6) AS log_w, "
-            "round(gk, 6) AS gumbel_key FROM keyed "
-            "ORDER BY gk DESC, doc_id LIMIT 50"
-        ),
-        # C4 cascade: DuckDB rebuilds the same synthetic multi-line corpus
-        # and replays the line filter (lambda), doc rules and sentence
-        # proxy from scratch; kept_text compares as md5
-        "c4_filters": (
-            "WITH d AS (SELECT doc_id, text FROM documents), "
-            "b AS (SELECT doc_id, text, substr(text, 1, 40) || '.' AS g, "
-            "substr(text, 45, 10) AS bad, CAST(doc_id % 6 AS INT) AS k "
-            "FROM d), "
-            "t2 AS (SELECT doc_id, CASE WHEN text IS NOT NULL THEN "
-            "g || chr(10) || bad || repeat(chr(10) || g, k) "
-            "|| CASE WHEN doc_id % 17 = 0 THEN chr(10) || "
-            "'Click here to subscribe today.' ELSE '' END "
-            "|| CASE WHEN doc_id % 23 = 0 THEN chr(10) || 'var x = {1};' "
-            "ELSE '' END "
-            "|| CASE WHEN doc_id % 29 = 0 THEN chr(10) || "
-            "'Lorem Ipsum dolor sit.' ELSE '' END "
-            "END AS text FROM b), "
-            "ann AS (SELECT doc_id, text, CASE WHEN text IS NOT NULL THEN "
-            "list_filter(string_split(text, chr(10)), ln -> "
-            "regexp_matches(rtrim(ln), '[.!?\"”]$') AND "
-            "len(string_split_regex(trim(ln), '\\s+')) >= 3) END AS ka, "
-            "lower(coalesce(text, '')) AS lowered FROM t2), "
-            "fin AS (SELECT doc_id, "
-            "CASE WHEN text IS NOT NULL THEN array_to_string(ka, chr(10)) "
-            "END AS kept_text, "
-            "CASE WHEN text IS NOT NULL THEN len(string_split(text, chr(10))) "
-            "ELSE 0 END AS n_lines, "
-            "CASE WHEN text IS NOT NULL THEN len(ka) ELSE 0 END "
-            "AS n_kept_lines, "
-            "(contains(lowered, 'click here to subscribe') OR "
-            "contains(lowered, 'all rights reserved')) AS blocked, "
-            "contains(lowered, 'lorem ipsum') AS lorem, "
-            "contains(lowered, '{') AS brace, "
-            "text IS NOT NULL AS nn FROM ann), "
-            "sen AS (SELECT *, length(regexp_replace(coalesce(kept_text, ''), "
-            "'[^.!?]', '', 'g')) AS ns FROM fin) "
-            "SELECT doc_id, md5(coalesce(kept_text, '')) AS kept_md5, "
-            "CAST(n_lines AS INT) AS n_lines, "
-            "CAST(n_kept_lines AS INT) AS n_kept_lines, "
-            "CAST(ns AS INT) AS n_sentences, "
-            "CAST(blocked AS INT) AS blocked, CAST(lorem AS INT) AS lorem, "
-            "CAST(brace AS INT) AS brace, "
-            "CAST((nn AND ns >= 5 AND NOT blocked AND NOT lorem AND "
-            "NOT brace) AS INT) AS keep FROM sen"
-        ),
-        # Gopher rules: DuckDB rebuilds the decorated corpus and replays
-        # every metric (list lambdas, length-diff symbol counts) + verdict
-        "gopher_filters": (
-            "WITH d AS (SELECT doc_id, text FROM documents), "
-            "t2 AS (SELECT doc_id, CASE WHEN text IS NOT NULL THEN "
-            "CASE WHEN doc_id % 19 = 0 THEN '• alpha beta gamma' || chr(10) "
-            "|| '- delta epsilon zeta' || chr(10) ELSE '' END "
-            "|| text "
-            "|| CASE WHEN doc_id % 2 = 0 THEN ' and that have with' "
-            "ELSE '' END "
-            "|| CASE WHEN doc_id % 13 = 0 THEN ' #####' ELSE '' END "
-            "|| CASE WHEN doc_id % 11 = 0 THEN chr(10) || "
-            "'to be continued...' || chr(10) || 'and more soon...' "
-            "ELSE '' END END AS text FROM d), "
-            "w AS (SELECT doc_id, text, "
-            "list_filter(string_split_regex(trim(coalesce(text, '')), "
-            "'\\s+'), x -> x <> '') AS words, "
-            "string_split(coalesce(text, ''), chr(10)) AS lines FROM t2), "
-            "m AS (SELECT doc_id, text, words, lines, "
-            "len(words) AS nw, len(lines) AS nl, "
-            "CASE WHEN len(words) > 0 THEN "
-            "CAST(list_sum(list_transform(words, x -> length(x))) AS DOUBLE) "
-            "/ len(words) ELSE 0.0 END AS mwl, "
-            "length(coalesce(text, '')) - "
-            "length(replace(coalesce(text, ''), '#', '')) AS nhash, "
-            "(length(coalesce(text, '')) - "
-            "length(replace(coalesce(text, ''), '...', ''))) / 3 AS nell "
-            "FROM w), "
-            "r AS (SELECT doc_id, text, nw, round(mwl, 6) AS mwl, "
-            "round(CASE WHEN nw > 0 THEN (CAST(nhash AS DOUBLE) + nell) / nw "
-            "ELSE 0.0 END, 6) AS sym, "
-            "round(CASE WHEN nl > 0 THEN CAST(len(list_filter(lines, "
-            "ln -> regexp_matches(ltrim(ln), '^[•\\-\\*]'))) AS DOUBLE) / nl "
-            "ELSE 0.0 END, 6) AS bul, "
-            "round(CASE WHEN nl > 0 THEN CAST(len(list_filter(lines, "
-            "ln2 -> rtrim(ln2) LIKE '%...')) AS DOUBLE) / nl "
-            "ELSE 0.0 END, 6) AS ell, "
-            "round(CASE WHEN nw > 0 THEN CAST(len(list_filter(words, "
-            "x2 -> regexp_matches(x2, '[a-zA-Z]'))) AS DOUBLE) / nw "
-            "ELSE 0.0 END, 6) AS alpha, "
-            "len(list_filter(['the', 'be', 'to', 'of', 'and', 'that', "
-            "'have', 'with'], s -> list_contains(list_transform(words, "
-            "x3 -> lower(x3)), s))) AS nstop FROM m) "
-            "SELECT doc_id, CAST(nw AS INT) AS n_words, "
-            "mwl AS mean_word_len, sym AS symbol_word_ratio, "
-            "bul AS bullet_line_frac, ell AS ellipsis_line_frac, "
-            "alpha AS alpha_word_frac, CAST(nstop AS INT) AS n_stop_hits, "
-            "CAST((text IS NOT NULL AND nw BETWEEN 20 AND 100000 "
-            "AND mwl BETWEEN 3.0 AND 10.0 AND sym <= 0.1 AND bul <= 0.9 "
-            "AND ell <= 0.3 AND alpha >= 0.8 AND nstop >= 2) AS INT) AS keep "
-            "FROM r"
         ),
         # as-of via DuckDB's native ASOF LEFT JOIN; range via a plain
         # BETWEEN theta join (the engine's bucketed join must equal it)
@@ -7566,11 +6672,8 @@ def oracle_sql() -> dict[str, str]:
     # verbatim, so removing the standalone keys loses no verification)
     for merged in (
         "p1_missing_pct", "p14_prefix_key", "j5_semi_anti", "a6_confusion",
-        "x1_hash_split", "p2_notnull_filter", "p11_canon_map",
-        "p4_rename_project", "p21_serialize", "j3_hydrate_pairs",
-        "f12_field_diff", "a4_group_count", "a8_doc_freq",
-        "w2_latest_per_group", "f8_date_parse", "f1_jaro_winkler",
-        "f2_levenshtein", "text_token_counts", "text_quality", "text_langid",
+        "x1_hash_split", "j3_hydrate_pairs", "a4_group_count", "a8_doc_freq",
+        "f1_jaro_winkler", "text_token_counts", "text_quality", "text_langid",
         "event_hourly", "event_sessions", "w4_hash_quota", "strat_sample",
         "p8_norm_text", "p12_numeric_norm", "p16_regex_filter",
         "p18_checksum", "f4_gauss_comparator", "u1_union_sources",
@@ -7579,13 +6682,13 @@ def oracle_sql() -> dict[str, str]:
         # round-4 window merges (each rides verbatim inside its composite)
         "blocking_b1", "blocking_b2", "dedup_exact", "dedup_token_jaccard",
         "pii_scrub", "doc_repetition", "decontam_overlap", "seq_pack",
-        "token_budget", "simhash_hd", "c4_filters", "gopher_filters",
+        "token_budget", "simhash_hd",
         # round-4 session-4 merges: the former past-window standalone
         # oracles now ride verbatim inside window composites
         "soft_tfidf", "span_overlap", "span_dedup", "semantic_dedup",
-        "sn_pairs", "lm_entropy", "dsir_select", "transcript_integrity",
-        "prefix_dups", "conv_reseg", "agent_loops", "tool_transitions",
-        "tool_ngrams", "transition_drift", "turn_boilerplate",
+        "sn_pairs", "transcript_integrity", "prefix_dups", "conv_reseg",
+        "agent_loops", "tool_transitions", "tool_ngrams", "transition_drift",
+        "turn_boilerplate",
     ):
         out.pop(merged, None)
     return out

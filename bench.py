@@ -475,40 +475,6 @@ def main() -> None:
         )
     )
 
-    # URL canonicalization + keep-one dedup: the zero-shuffle expression
-    # ladder over a deterministically messy URL per doc, then the one
-    # canonical-key exchange (crawl-order stage 1 at 100 TB).
-    from record_linkage_spark.functions.urls import canonicalize_url, url_dedup
-
-    def _messy(d):
-        well = F.concat(
-            F.lit("HTTP://"),
-            F.when(d % 3 == 0, F.lit("WWW.")).otherwise(F.lit("")),
-            F.lit("Site"), (d % 997).cast("string"), F.lit(".Example.COM"),
-            F.when(d % 5 == 0, F.lit(":80")).otherwise(F.lit("")),
-            F.lit("/p"), (d % 11).cast("string"),
-            F.when(d % 4 == 0, F.lit("//x/")).otherwise(F.lit("/x")),
-            F.lit("?utm_source=t&b="), (d % 2).cast("string"), F.lit("&a=1"),
-        )
-        return F.when(
-            d % 13 == 0, F.concat(F.lit("not a url "), d.cast("string"))
-        ).otherwise(well)
-
-    url_rows = docs_txt.select(
-        "doc_id", _messy(F.col("doc_id")).alias("raw_url")
-    )
-    _, queries["url_canon_dedup"] = _timed_best2(
-        lambda: (
-            url_rows.select(canonicalize_url("raw_url")).agg(
-                F.count(F.lit(1))
-            ).collect(),
-            url_dedup(
-                url_rows, "raw_url",
-                order_by=[F.col("raw_url").asc(), F.col("doc_id").asc()],
-            ).count(),
-        )
-    )
-
     # quality classifier: hashed-ngram featurize + closed-form NB train +
     # join-sum score of the whole doc corpus (lang='en' as the positive
     # class stand-in for a curated-quality label).

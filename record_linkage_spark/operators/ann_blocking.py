@@ -11,7 +11,7 @@ pure Catalyst columns so the whole path is SQL-replayable):
 
 - ``hashed_text_vectors``: text -> L2-normalized ``array<double>`` of
   signed token-count buckets. Token hash is the md5-portable pattern
-  (``conv(substr(md5(t),1,15),16,10)``) shared with dsir/dedup, so
+  (``conv(substr(md5(t),1,15),16,10)``) shared with dedup, so
   DuckDB rebuilds identical vectors.
 - ``ann_candidate_pairs``: profiles -> (id_A, id_B, block_key,
   strategy) via RHP-LSH bucket self-join (``similarity_search.
@@ -141,7 +141,7 @@ def banding_plan(
 
 
 def _tok_hash(t: Column) -> Column:
-    """md5-portable 60-bit token hash (same pattern as dsir/dedup)."""
+    """md5-portable 60-bit token hash (same pattern as dedup)."""
     return F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long")
 
 

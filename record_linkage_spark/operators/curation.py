@@ -328,11 +328,10 @@ def keep_best_per_cluster(
     :func:`~record_linkage_spark.operators.clustering.assign_entities`),
     then the argmin of ``(order_cols..., id_col)`` within each component.
 
-    This is the keep-a-representative policy that
-    :func:`~record_linkage_spark.plans.curate.dedup_corpus`'s docstring
-    contrasts with its single-pass drop-list: in a non-transitive chain
-    (a~b, b~c, a!~c) the drop-list policy removes both b and c, while this
-    one keeps exactly one doc per component — e.g. the highest-quality one
+    This is the keep-a-representative policy, as opposed to a
+    single-pass drop-list of each pair's later doc: in a non-transitive
+    chain (a~b, b~c, a!~c) the drop-list policy removes both b and c,
+    while this one keeps exactly one doc per component — e.g. the highest-quality one
     (pass ``[F.col("q_score").desc()]``). Docs in no pair are their own
     singleton component and always survive.
 

@@ -6,10 +6,10 @@ GPT-3 paper, Brown et al. 2020 §A, trains exactly this shape — a linear
 classifier over hashed n-gram features with curated text as positives
 and raw crawl as negatives; fastText itself is Joulin et al., "Bag of
 Tricks for Efficient Text Classification", EACL 2017). It complements
-the RULE filters in ``operators/web_filters.py`` (C4/Gopher cascades):
-rules encode fixed heuristics, the classifier DISTILLS any labeled
-signal — including those same rules' verdicts — into a soft score that
-ranks the gray zone the rules can't.
+rule filters (C4/Gopher-style cascades): rules encode fixed
+heuristics, the classifier DISTILLS any labeled signal — including
+those same rules' verdicts — into a soft score that ranks the gray
+zone the rules can't.
 
 Design, all Spark-first:
 

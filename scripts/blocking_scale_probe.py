@@ -2,7 +2,8 @@
 moments for B1 vs B2 at 40k and 400k entities, plus timed B2 runs and
 recall — the cascade-mitigation evidence for the sf1 ledger (BENCH/BASELINE.md round-5 section)."""
 import sys, time, json
-sys.path.insert(0, "/root/repo")
+from pathlib import Path
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 from record_linkage_spark.session import get_spark
 from pyspark.sql import functions as F
 

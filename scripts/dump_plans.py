@@ -10,8 +10,10 @@ from __future__ import annotations
 import contextlib
 import io
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 import __spark_entry__ as em  # noqa: E402
 from record_linkage_spark.session import get_spark  # noqa: E402
@@ -40,12 +42,6 @@ COMMENTARY = {
         "(id, signature) tuples; the exact-Jaccard verify re-shingles only "
         "pairs that survived banding (semi-join reduction). No stage "
         "enumerates all pairs."
-    ),
-    "curation_funnel": (
-        "Corpus-hygiene funnel. Every removal is a left_anti join whose "
-        "build side is the (small) drop set; the corpus payload is scanned "
-        "once (localCheckpoint at the filter boundary) and never "
-        "reshuffled between stages."
     ),
     "event_windows": (
         "Windowed rollup + gap sessionization: one Exchange on the session key (user_id), "
@@ -198,13 +194,6 @@ COMMENTARY = {
         "BroadcastHashJoin of the query keys against the tiny counter "
         "table, then a codegen least(). Zero Python; mergeable by "
         "union + re-sum."
-    ),
-    "url_canonical_dedup": (
-        "URL canonicalization + keep-one dedup (functions/urls.py). The "
-        "whole RFC-3986 ladder is a codegen projection fused into the "
-        "scan (zero exchanges until the dedup); the keep-one winner is a "
-        "single min_by-style aggregate on the canonical key — the only "
-        "shuffle, keyed by full URL so domain skew never concentrates."
     ),
     "quantile_histogram": (
         "HDR quantile histogram build + readout (operators/sketches.py). "
@@ -454,26 +443,6 @@ def _q_cms_sketch(spark, sf):
     return cms_estimate(o.distinct(), "v", cms_build(o, "v"), depth=4, width=256)
 
 
-def _q_url_canonical_dedup(spark, sf):
-    from pyspark.sql import functions as F
-
-    from record_linkage_spark.functions.urls import url_dedup
-
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    d = F.col("doc_id")
-    rows = docs.select(
-        "doc_id",
-        F.concat(
-            F.lit("HTTP://WWW.Site"), (d % 37).cast("string"),
-            F.lit(".Example.COM:80/p"), (d % 11).cast("string"),
-            F.lit("?utm_source=t&a=1"),
-        ).alias("raw_url"),
-    )
-    return url_dedup(
-        rows, "raw_url", order_by=[F.col("raw_url").asc(), F.col("doc_id").asc()]
-    )
-
-
 def _q_quantile_histogram(spark, sf):
     from pyspark.sql import functions as F
 
@@ -617,7 +586,6 @@ FALLBACK = {
     "bpe_pair_counts": _q_bpe_pair_counts,
     "cms_sketch": _q_cms_sketch,
     "quantile_histogram": _q_quantile_histogram,
-    "url_canonical_dedup": _q_url_canonical_dedup,
     "quality_scorer": _q_quality_scorer,
     "drift_report": _q_drift_report,
     "zorder_audit": _q_zorder_audit,
@@ -657,9 +625,9 @@ def main() -> None:
         "also pinned by `tests/test_plan_audit.py`, so they can't silently\n"
         "regress.\n\n"
     )
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(REPO / "PLANS.md", "w") as f:
         f.write(header + "\n".join(sections))
-    print("wrote /root/repo/PLANS.md")
+    print(f"wrote {REPO / 'PLANS.md'}")
 
 
 if __name__ == "__main__":

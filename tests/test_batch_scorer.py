@@ -49,13 +49,15 @@ def test_scorer_end_to_end_learns_separation(spark):
     raw = generate_transcripts(spark, n_entities=150, dup_rate=2.0)
     profiles = rollup_conversations(transcripts_table(raw))
     keys = hidden_key_table(raw).select("conv_id", "entity_key")
-    gt = build_ground_truth(profiles, keys, neg_ratio=2.0)
+    # materialize the synth -> rollup -> ground-truth lineage once: the
+    # four actions below would otherwise each recompute it from scratch
+    gt = build_ground_truth(profiles, keys, neg_ratio=2.0).localCheckpoint()
     fields = ["first_text_norm", "last_text_norm", "first_role",
               "primary_tool", "n_turns", "n_tokens"]
     hyd = add_pair_text(
         hydrate_pairs(gt, profiles, fields),
         fields,
-    )
+    ).localCheckpoint()
     train = hyd.filter(F.col("split") == "train")
     model = train_hashing_scorer(train)
 

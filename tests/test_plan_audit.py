@@ -345,22 +345,6 @@ def test_semantic_dedup_pairs_join_on_cell(spark):
     assert "EvalPython" not in plan
 
 
-def test_web_filters_run_at_scan_speed(spark):
-    """C4 and Gopher rule cascades: pure Catalyst column work — zero
-    Exchange (no shuffle of any kind), zero Python. They must fuse into
-    whatever scan feeds them at 100 TB."""
-    from record_linkage_spark.operators.web_filters import (
-        c4_filters,
-        gopher_filters,
-    )
-
-    docs = _doc_df(spark)
-    for df in (c4_filters(docs), gopher_filters(docs)):
-        plan = _plan(df)
-        assert "Exchange" not in plan
-        assert "EvalPython" not in plan
-
-
 def test_explain_pairs_adds_no_shuffle_or_window(spark):
     """Match explanations: contribution array + array_sort comparator +
     bounded explode — ranking must NOT introduce a Window or an Exchange
