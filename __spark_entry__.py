@@ -19,8 +19,6 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-SF_DEFAULT = "/root/testdata/sf0.001"
-
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
@@ -481,16 +479,6 @@ def _name_pairs(spark, sf):
     )
 
 
-def q_f1_jaro_winkler(spark, sf):
-    """F1: batched Jaro-Winkler Arrow kernel vs DuckDB's native JW."""
-    from record_linkage_spark.functions.similarity import jw_sim
-
-    p = _name_pairs(spark, sf)
-    return p.select(
-        "c_custkey", "s_suppkey", F.round(jw_sim("c_name", "s_name"), 6).alias("jw")
-    )
-
-
 def q_f4_gauss_comparator(spark, sf):
     """F4: recordlinkage-style gaussian numeric comparator."""
     from record_linkage_spark.functions.comparators import gauss_sim
@@ -608,21 +596,6 @@ def q_ann_brute_topk(spark, sf):
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= 5)
         .select("query_id", "neighbor_id", "cosine", "rank")
-    )
-
-
-def q_text_quality(spark, sf):
-    """Quality scoring features + composite score."""
-    from record_linkage_spark.operators.text_analysis import quality_features
-
-    d = _t(spark, sf, "documents")
-    qf = quality_features(d)
-    return qf.select(
-        "doc_id",
-        F.col("q_n_tokens").cast("bigint").alias("n_tokens"),
-        F.round("q_stopword_ratio", 6).alias("stopword_ratio"),
-        F.round("q_alpha_ratio", 6).alias("alpha_ratio"),
-        F.round("q_score", 6).alias("q_score"),
     )
 
 
@@ -3936,9 +3909,9 @@ def q_ann_blocking(spark, sf):
 
 
 def q_rl_ann_candidates(spark, sf):
-    """Production ANN blocking (``--strategy ANN``): RHP-LSH bucket
-    self-join over hashed profile vectors + exact-cosine verify — the
-    vector-similarity third strategy next to the B1/B2 key cascades.
+    """ANN blocking (``ann_candidate_pairs``): RHP-LSH bucket self-join
+    over hashed profile vectors + exact-cosine verify — vector-similarity
+    candidate pairs with the same contract as the B1/B2 key cascades.
     Rows-only (the banded RHP signature is probabilistic); pytest pins
     candidates == subset of brute force with recall >= 0.8
     (``tests/test_ann_blocking.py``)."""
@@ -5363,10 +5336,6 @@ def _portable_flagship_oracles() -> dict[str, str]:
 
 
 def oracle_sql() -> dict[str, str]:
-    name_pairs = (
-        "SELECT c_custkey, s_suppkey, c_name, s_name FROM customer "
-        "JOIN supplier ON c_nationkey = s_nationkey"
-    )
     # base ∪ planted messy copies — textual mirror of _messy_copies()
     messy_docs = (
         "SELECT doc_id, text FROM documents WHERE text IS NOT NULL "
@@ -5839,10 +5808,6 @@ def oracle_sql() -> dict[str, str]:
             "+ ascii(substring(md5(CAST(doc_id AS VARCHAR)), 2, 1))) % 100 AS bucket FROM documents) "
             "SELECT CASE WHEN bucket < 70 THEN 'train' WHEN bucket < 80 THEN 'val' "
             "ELSE 'test' END AS split, CAST(count(*) AS BIGINT) AS n FROM b GROUP BY 1"
-        ),
-        "f1_jaro_winkler": (
-            f"SELECT c_custkey, s_suppkey, round(jaro_winkler_similarity(c_name, s_name), 6) AS jw "
-            f"FROM ({name_pairs})"
         ),
         "f4_gauss_comparator": (
             "SELECT l_orderkey, l_linenumber, round(CASE "
@@ -6673,7 +6638,7 @@ def oracle_sql() -> dict[str, str]:
     for merged in (
         "p1_missing_pct", "p14_prefix_key", "j5_semi_anti", "a6_confusion",
         "x1_hash_split", "j3_hydrate_pairs", "a4_group_count", "a8_doc_freq",
-        "f1_jaro_winkler", "text_token_counts", "text_quality", "text_langid",
+        "text_token_counts", "text_quality", "text_langid",
         "event_hourly", "event_sessions", "w4_hash_quota", "strat_sample",
         "p8_norm_text", "p12_numeric_norm", "p16_regex_filter",
         "p18_checksum", "f4_gauss_comparator", "u1_union_sources",

@@ -84,11 +84,9 @@ def main() -> None:
     _, queries["tpch_q1_agg"] = _timed(lambda: em.q_a5_summary_stats(spark, sf_dir).collect())
     _, queries["blocked_self_join"] = _timed(lambda: em.q_j1_selfjoin_key(spark, sf_dir).count())
     _, queries["topk_window"] = _timed(lambda: em.q_w5_topk_per_group(spark, sf_dir).count())
-    _, queries["jw_kernel_pairs"] = _timed(lambda: em.q_f1_jaro_winkler(spark, sf_dir).count())
     _, queries["dedup_exact"] = _timed(lambda: em.q_dedup_exact(spark, sf_dir).count())
     _, queries["dedup_minhash"] = _timed_best2(lambda: em.q_rl_minhash(spark, sf_dir).count())
     _, queries["ann_brute_topk"] = _timed(lambda: em.q_ann_brute_topk(spark, sf_dir).count())
-    _, queries["text_quality"] = _timed(lambda: em.q_text_quality(spark, sf_dir).count())
 
     # --- record-linkage pipeline at sf-scaled synthetic corpus ------------
     from record_linkage_spark.operators.blocking import candidate_pairs
@@ -128,8 +126,10 @@ def main() -> None:
 
     # vector-similarity blocking: hashed-vector build + RHP-LSH bucket
     # join + exact-cosine verify over the same profile table
+    from record_linkage_spark.operators.ann_blocking import ann_candidate_pairs
+
     _, queries["ann_blocking_join"] = _timed_best2(
-        lambda: candidate_pairs(profiles, "ANN").count()
+        lambda: ann_candidate_pairs(profiles).count()
     )
 
     model = LinearModel(

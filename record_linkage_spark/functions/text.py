@@ -4,17 +4,23 @@ Re-expresses the reference's row-at-a-time pandas normalizers
 (``src/preparation/mediated_schema.py:80-125`` — ``_clean_text`` /
 ``_clean_desc``) as native Spark column expressions: lowercase, URL strip,
 non-alphanumeric strip, whitespace collapse, null-token canonicalization.
-No Python executes per row.
+No Python executes per row. ``_norm_token_lists`` is the one batch (pandas)
+mirror of ``norm_text_with_urls``, for vectorized kernels that tokenize
+inside a pandas UDF.
 """
 
 from __future__ import annotations
 
+import re
+
+import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from record_linkage_spark.config import NULL_TOKENS
 
 __all__ = [
+    "md5_60",
     "norm_text",
     "norm_text_with_urls",
     "norm_tokens",
@@ -62,6 +68,21 @@ def norm_text_with_urls(c) -> Column:
     return F.when(s == "", F.lit(None).cast("string")).otherwise(s)
 
 
+# --- batch (pandas) text normalization mirroring norm_text_with_urls ---
+# Java regex \s / \S are ASCII-only; re.ASCII keeps Python parity.
+_URL_RE = re.compile(r"(http\S+|www\S+)", re.ASCII)
+_NON_ALNUM_RE = re.compile(r"[^a-z0-9\s]", re.ASCII)
+_WS_RE = re.compile(r"\s+", re.ASCII)
+
+
+def _norm_token_lists(text: pd.Series) -> list[list[str]]:
+    s = text.fillna("").astype(str).str.lower()
+    s = s.str.replace(_URL_RE, " ", regex=True)
+    s = s.str.replace(_NON_ALNUM_RE, " ", regex=True)
+    s = s.str.replace(_WS_RE, " ", regex=True).str.strip()
+    return [t.split(" ") if t else [] for t in s]
+
+
 def norm_tokens(c) -> Column:
     """Normalized token array of a text column (split on whitespace after
     norm_text_with_urls). Empty/NULL text -> empty array."""
@@ -69,6 +90,17 @@ def norm_tokens(c) -> Column:
     return F.when(s.isNull(), F.array().cast("array<string>")).otherwise(
         F.split(s, " ")
     )
+
+
+def md5_60(col) -> Column:
+    """Cross-engine-portable 60-bit token hash: the first 15 hex chars of
+    md5, parsed as an integer. Unlike xxhash64 (JVM-only) or the siphash
+    kernels (Python-only), an independent engine (DuckDB:
+    ``('0x' || substr(md5(t), 1, 15))::BIGINT``) reproduces it exactly, so
+    operators built on it can be value-checked end-to-end by a SQL oracle.
+    60 bits keeps the value inside a signed long in both engines."""
+    c = F.col(col) if isinstance(col, str) else col
+    return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
 
 
 def prefix_key(c, n: int) -> Column:

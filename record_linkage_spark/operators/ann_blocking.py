@@ -11,15 +11,13 @@ pure Catalyst columns so the whole path is SQL-replayable):
 
 - ``hashed_text_vectors``: text -> L2-normalized ``array<double>`` of
   signed token-count buckets. Token hash is the md5-portable pattern
-  (``conv(substr(md5(t),1,15),16,10)``) shared with dedup, so
+  (``functions.text.md5_60``) shared with dedup and the sketches, so
   DuckDB rebuilds identical vectors.
 - ``ann_candidate_pairs``: profiles -> (id_A, id_B, block_key,
   strategy) via RHP-LSH bucket self-join (``similarity_search.
-  embedding_near_duplicates``) + exact-cosine verify. Drop-in third
-  strategy for the linkage pipeline (``--strategy ANN``).
-- ``ann_pair_filter``: the filter form over a hydrated (_A/_B) labeled
-  pair table — vectors are built once per DISTINCT text (groupBy path,
-  not a per-pair HOF), then joined back by text hash.
+  embedding_near_duplicates``) + exact-cosine verify: the candidate-pair
+  contract of ``blocking.candidate_pairs``, called directly (the
+  ``rl_ann_candidates`` contract entry does).
 
 Scale shape:
 - the vector build is explode -> groupBy(id, bucket) with map-side
@@ -40,6 +38,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from record_linkage_spark.functions.text import md5_60
 
 def unit_dot(a, b) -> Column:
     """Cosine of two ALREADY L2-normalized vectors: the plain dot.
@@ -140,11 +140,6 @@ def banding_plan(
     return r, b, True
 
 
-def _tok_hash(t: Column) -> Column:
-    """md5-portable 60-bit token hash (same pattern as dedup)."""
-    return F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long")
-
-
 def hashed_text_vectors(
     texts: DataFrame,
     id_col: str = "doc_id",
@@ -165,7 +160,7 @@ def hashed_text_vectors(
             F.split(F.coalesce(F.col(text_col), F.lit("")), r"\s+")
         ).alias("_t"),
     ).filter(F.col("_t") != "")
-    x = F.pmod(_tok_hash(F.col("_t")), F.lit(2 * dim))
+    x = F.pmod(md5_60("_t"), F.lit(2 * dim))
     signed = toks.select(
         "_id",
         (x / F.lit(2)).cast("int").alias("_bucket"),
@@ -413,43 +408,6 @@ def ann_candidate_pairs(
             F.lit("ANN").alias("strategy"),
         )
     )
-
-
-def ann_pair_filter(
-    hydrated_pairs: DataFrame,
-    text_cols: tuple[str, ...] = ("first_text_norm", "last_text_norm"),
-    dim: int = ANN_DIM,
-    cosine_threshold: float = ANN_COSINE_THRESHOLD,
-) -> DataFrame:
-    """Filter form over a hydrated (_A/_B) pair table: keep pairs whose
-    hashed-text vectors clear the cosine threshold.
-
-    Vectors are built once per DISTINCT text via the groupBy path and
-    joined back on the text's md5 — the per-pair cost is two hash joins,
-    not a per-pair O(dim x tokens) expression."""
-    a_text = F.concat_ws(
-        " ", *[F.coalesce(F.col(f"{c}_A"), F.lit("")) for c in text_cols]
-    )
-    b_text = F.concat_ws(
-        " ", *[F.coalesce(F.col(f"{c}_B"), F.lit("")) for c in text_cols]
-    )
-    keyed = hydrated_pairs.withColumn("_ka", F.md5(a_text)).withColumn(
-        "_kb", F.md5(b_text)
-    )
-    texts = (
-        keyed.select(F.col("_ka").alias("_k"), a_text.alias("_text"))
-        .unionByName(keyed.select(F.col("_kb").alias("_k"), b_text.alias("_text")))
-        .dropDuplicates(["_k"])
-    )
-    vecs = hashed_text_vectors(texts, id_col="_k", text_col="_text", dim=dim)
-    va = vecs.select(F.col("_k").alias("_ka"), F.col("vec").alias("_va"))
-    vb = vecs.select(F.col("_k").alias("_kb"), F.col("vec").alias("_vb"))
-    out = (
-        keyed.join(va, "_ka")
-        .join(vb, "_kb")
-        .filter(unit_dot("_va", "_vb") >= F.lit(cosine_threshold))
-    )
-    return out.drop("_ka", "_kb", "_va", "_vb")
 
 
 def brute_force_cosine_pairs(

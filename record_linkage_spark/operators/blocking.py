@@ -165,16 +165,10 @@ def candidate_pairs(
     parquet stage, as the pipeline does) so the rollup isn't recomputed
     per branch.
 
-    ``strategy="ANN"`` dispatches to vector-similarity blocking
-    (``ann_blocking.ann_candidate_pairs``) — same output contract, the
-    LSH bucket join standing in for the salted key join.
+    ``strategy`` names a :data:`STRATEGIES` cascade; any other name
+    raises ``KeyError``. Vector-similarity blocking has the same output
+    contract but its own entry point, ``ann_blocking.ann_candidate_pairs``.
     """
-    if strategy == "ANN":
-        from record_linkage_spark.operators.ann_blocking import (
-            ann_candidate_pairs,
-        )
-
-        return ann_candidate_pairs(profiles)
     recs, key_names, payload_cols = block_records(profiles, strategy)
 
     # per-key sizes -> planner-driven salt fan-out: the skew planner's
@@ -241,13 +235,7 @@ def apply_blocking_filter(
     keys_only=True stops after the block-KEY equality legs (no JW/exact
     cascade filters) — the \"labeled pairs at the same blocking key\"
     domain, where hard negatives survive for ranking-quality metrics.
-
-    ``strategy="ANN"``: the vector-cosine threshold IS the block
-    membership test, so keys_only and the full cascade coincide."""
-    if strategy == "ANN":
-        from record_linkage_spark.operators.ann_blocking import ann_pair_filter
-
-        return ann_pair_filter(hydrated_pairs)
+    An unknown strategy raises ``KeyError``, as in :func:`candidate_pairs`."""
     legs = key_legs(strategy)
     if not keys_only:
         legs += verify_legs(strategy)

@@ -226,7 +226,7 @@ def transcript_tool_relations(
     are exactly what the hub-key guard drops. In production the caller
     supplies whatever relation the domain carries (participants,
     referenced artifacts, session ids) — this extractor is the built-in
-    stand-in wired into the pipeline CLI.
+    stand-in for transcripts.
 
     Plan: one shuffle on ``id_col`` (the ordered collect), then a
     per-row slice explode — no joins. Conversations with fewer than

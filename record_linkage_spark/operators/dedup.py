@@ -19,15 +19,17 @@ verification predicate runs only on within-bucket pairs.
 
 from __future__ import annotations
 
-import re
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from record_linkage_spark.functions.text import norm_text_with_urls
+from record_linkage_spark.functions.text import (
+    _norm_token_lists,
+    md5_60,
+    norm_text_with_urls,
+)
 
 
 def _norm_tokens(text_col) -> Column:
@@ -56,21 +58,6 @@ def _ensure_parallelism(df: DataFrame) -> DataFrame:
     if 0 < n_files < max(target // 2, 2):
         return df.repartition(target)
     return df
-
-
-# --- batch text normalization mirroring functions.text.norm_text_with_urls ---
-# Java regex \s / \S are ASCII-only; re.ASCII keeps Python parity.
-_URL_RE = re.compile(r"(http\S+|www\S+)", re.ASCII)
-_NON_ALNUM_RE = re.compile(r"[^a-z0-9\s]", re.ASCII)
-_WS_RE = re.compile(r"\s+", re.ASCII)
-
-
-def _norm_token_lists(text: pd.Series) -> list[list[str]]:
-    s = text.fillna("").astype(str).str.lower()
-    s = s.str.replace(_URL_RE, " ", regex=True)
-    s = s.str.replace(_NON_ALNUM_RE, " ", regex=True)
-    s = s.str.replace(_WS_RE, " ", regex=True).str.strip()
-    return [t.split(" ") if t else [] for t in s]
 
 
 def exact_duplicates(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -761,17 +748,6 @@ def hamming64(a, b) -> Column:
     a = F.col(a) if isinstance(a, str) else a
     b = F.col(b) if isinstance(b, str) else b
     return F.bit_count(a.bitwiseXOR(b))
-
-
-def md5_60(col) -> Column:
-    """Cross-engine-portable 60-bit token hash: the first 15 hex chars of
-    md5, parsed as an integer. Unlike xxhash64 (JVM-only) or the siphash
-    kernels (Python-only), an independent engine (DuckDB:
-    ``('0x' || substr(md5(t), 1, 15))::BIGINT``) reproduces it exactly, so
-    operators built on it can be value-checked end-to-end by a SQL oracle.
-    60 bits keeps the value inside a signed long in both engines."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
 
 
 def simhash_portable_fp(

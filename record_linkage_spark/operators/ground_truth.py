@@ -242,7 +242,7 @@ def entity_safe_split(
     ``md5_60`` so a SQL oracle replays the routing bit-for-bit. Zero
     extra shuffles: one projection on the assignment table.
     """
-    from record_linkage_spark.operators.dedup import md5_60
+    from record_linkage_spark.functions.text import md5_60
 
     bucket = F.pmod(
         md5_60(F.concat(F.lit(salt + "\x01"), F.col(entity_col).cast("string"))),

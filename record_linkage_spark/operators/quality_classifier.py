@@ -51,7 +51,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from record_linkage_spark.operators.dedup import md5_60
+from record_linkage_spark.functions.text import md5_60
 
 INTERCEPT_FEAT = -1  # the bias rides the weight table as feature -1, x = 1
 

@@ -46,7 +46,7 @@ def _tokenize_kernel():
         "norm_tokens array<string>, token_set array<string>, token_hash_set array<long>"
     )
     def kernel(text: pd.Series) -> pd.DataFrame:
-        from record_linkage_spark.operators.dedup import _norm_token_lists
+        from record_linkage_spark.functions.text import _norm_token_lists
 
         token_lists = _norm_token_lists(text)
         tsets = [sorted(set(t)) for t in token_lists]

@@ -47,7 +47,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from record_linkage_spark.operators.dedup import md5_60
+from record_linkage_spark.functions.text import md5_60
 
 HASH_BITS = 60  # md5_60 yields a 60-bit non-negative long in both engines
 # Bloom words use 62 of a long's 63 non-sign bits so ``1 << (pos % 62)``

@@ -50,7 +50,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from record_linkage_spark.operators.dedup import md5_60
+from record_linkage_spark.functions.text import md5_60
 
 
 def key_frequencies(

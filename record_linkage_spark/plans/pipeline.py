@@ -6,7 +6,7 @@ Stages (each a checkpointed table + lineage sidecar, resumable):
   -> match_edges -> clusters (+ metrics JSON)
 
 Run:  python -m record_linkage_spark.plans.pipeline --warehouse /tmp/wh \
-        --entities 2000 [--from-stage candidates] [--strategy B1|B2|ANN]
+        --entities 2000 [--recompute-from candidates] [--strategy B1|B2|P1]
 On a real cluster the same module ships via spark-submit --py-files.
 """
 
@@ -71,33 +71,13 @@ class LinkagePipeline:
         neg_ratio: float = NEG_TO_POS_RATIO,
         transcripts_df: DataFrame | None = None,
         keys_df: DataFrame | None = None,
-        one_to_one: bool = False,
-        clusterer: str = "cc",
-        qa_boilerplate_min_convs: int = 25,
-        relations_df: DataFrame | None = None,
-        collective_alpha: float = 0.6,
-        release_qi: tuple[str, ...] = (),
-        release_k: int = 5,
     ):
-        if clusterer not in ("cc", "pivot", "star", "hac", "collective"):
-            raise KeyError(
-                f"unknown clusterer {clusterer!r} "
-                "(cc|pivot|star|hac|collective)"
-            )
         self.spark = spark
         self.wh = Warehouse(root=warehouse, spark=spark)
         self.n_entities = n_entities
         self.dup_rate = dup_rate
         self.strategy = strategy
         self.neg_ratio = neg_ratio
-        self.one_to_one = one_to_one
-        self.clusterer = clusterer
-        self.qa_boilerplate_min_convs = qa_boilerplate_min_convs
-        self._relations_df = relations_df
-        self.collective_alpha = collective_alpha
-        self.release_qi = tuple(release_qi)
-        self.release_k = release_k
-        self._collective_rounds: list[dict] | None = None
         self._transcripts_df = transcripts_df
         self._keys_df = keys_df
         self.model: LinearModel | None = None
@@ -109,8 +89,6 @@ class LinkagePipeline:
             "entities": self.n_entities,
             "dup_rate": self.dup_rate,
             "strategy": self.strategy,
-            "one_to_one": self.one_to_one,
-            "clusterer": self.clusterer,
             **kw,
         }
 
@@ -199,120 +177,19 @@ class LinkagePipeline:
             except OSError:
                 pass
 
-        def _edges() -> DataFrame:
-            matches = scored.filter(F.col("pred") == 1)
-            if self.one_to_one:
-                # 1:1 constraint (linking deduplicated sources): greedy
-                # matching on score keeps each record's single best match
-                from record_linkage_spark.operators.matching import (
-                    one_to_one_matching,
-                )
-
-                matches = one_to_one_matching(
-                    matches.select("id_A", "id_B", "score"),
-                    score_col="score",
-                )
-            return matches.select(
-                F.col("id_A").alias("src"), F.col("id_B").alias("dst")
-            )
-
         edges = wh.run_stage(
             "match_edges",
-            _edges,
+            lambda: scored.filter(F.col("pred") == 1).select(
+                F.col("id_A").alias("src"), F.col("id_B").alias("dst")
+            ),
             self._cfg(),
             inputs=["scored_pairs"],
             resume=resume,
         )
-        def _clusters() -> DataFrame:
-            if self.clusterer == "hac":
-                # score-aware: average-linkage agglomeration per CC
-                # component, cut at the tuned threshold — weakly-bridged
-                # groups split where transitive closure fuses them
-                from record_linkage_spark.operators.clustering import (
-                    hierarchical_clusters,
-                )
-
-                matches = scored.filter(F.col("pred") == 1).select(
-                    "id_A", "id_B", "score"
-                )
-                if self.one_to_one:
-                    from record_linkage_spark.operators.matching import (
-                        one_to_one_matching,
-                    )
-
-                    matches = one_to_one_matching(matches)
-                tau = self.model.threshold if self.model is not None else 0.5
-                hc = hierarchical_clusters(
-                    matches, threshold=tau, src_col="id_A", dst_col="id_B"
-                )
-                return (
-                    profiles.select("conv_id")
-                    .distinct()
-                    .join(hc, "conv_id", "left")
-                    .withColumn("entity_id", F.coalesce("entity_id", "conv_id"))
-                )
-            if self.clusterer == "collective":
-                # relational evidence reinforces ambiguous pairs:
-                # bootstrap merges attribute-certain pairs (so the result
-                # can only coarsen the cc answer), then iterative
-                # alpha*attr + (1-alpha)*neighborhood-Jaccard rounds
-                # promote pairs whose neighbors already co-resolve
-                from record_linkage_spark.operators.collective import (
-                    collective_link,
-                    transcript_tool_relations,
-                )
-
-                rel = (
-                    self._relations_df
-                    if self._relations_df is not None
-                    else transcript_tool_relations(transcripts)
-                )
-                tau = self.model.threshold if self.model is not None else 0.5
-                asg, rounds = collective_link(
-                    profiles.select("conv_id"),
-                    scored.select("id_A", "id_B", "score"),
-                    rel,
-                    id_col="conv_id",
-                    attr_col="score",
-                    alpha=self.collective_alpha,
-                    threshold=tau,
-                )
-                self._collective_rounds = rounds
-                return asg
-            if self.clusterer in ("pivot", "star"):
-                # noise-robust alternatives: both bound clusters to
-                # radius 1 around a center, so a false match edge can't
-                # fuse whole entities transitively; pivot centers by a
-                # random permutation, star by match-evidence degree
-                from record_linkage_spark.operators.clustering import (
-                    correlation_clustering,
-                    star_clustering,
-                )
-
-                fn = (
-                    star_clustering
-                    if self.clusterer == "star"
-                    else correlation_clustering
-                )
-                cc = fn(edges)
-                return (
-                    profiles.select("conv_id")
-                    .distinct()
-                    .join(cc, "conv_id", "left")
-                    .withColumn("entity_id", F.coalesce("entity_id", "conv_id"))
-                )
-            return assign_entities(profiles.select("conv_id"), edges)
-
         clusters = wh.run_stage(
             "clusters",
-            _clusters,
-            self._cfg(
-                **(
-                    {"collective_alpha": self.collective_alpha}
-                    if self.clusterer == "collective"
-                    else {}
-                )
-            ),
+            lambda: assign_entities(profiles.select("conv_id"), edges),
+            self._cfg(),
             inputs=["match_edges", "profiles"],
             resume=resume,
         )
@@ -325,7 +202,7 @@ class LinkagePipeline:
             golden_records,
         )
 
-        golden = wh.run_stage(
+        wh.run_stage(
             "golden_records",
             lambda: golden_records(
                 profiles.select(*CONVERSATION_FUSION_COLS),
@@ -336,32 +213,6 @@ class LinkagePipeline:
             inputs=["clusters", "profiles"],
             resume=resume,
         )
-
-        # optional release gate: k-anonymity audit of the golden table
-        # (the artifact that leaves the pipeline) over caller-named
-        # quasi-identifier columns, with the suppression cost at k
-        release_gate = None
-        if self.release_qi:
-            from record_linkage_spark.operators.privacy import (
-                k_anonymity_report,
-                suppress_below_k,
-            )
-
-            gr = k_anonymity_report(golden, self.release_qi).first()
-            n_released = suppress_below_k(
-                golden, self.release_qi, self.release_k
-            ).count()
-            release_gate = {
-                "qi": list(self.release_qi),
-                "k": self.release_k,
-                "k_min": int(gr.k_min or 0),
-                "n_classes": int(gr.n_classes or 0),
-                "n_records": int(gr.n_records or 0),
-                "n_singleton_classes": int(gr.n_singleton_classes or 0),
-                "n_released_at_k": int(n_released),
-                "n_suppressed_at_k": int((gr.n_records or 0) - n_released),
-                "passes_at_k": bool((gr.k_min or 0) >= self.release_k),
-            }
 
         # evaluation report (E3 analogue)
         gt_scored = scored.join(
@@ -453,104 +304,16 @@ class LinkagePipeline:
                 .first()
             )
             auc_val, ap_val = rank_row.auc, rank_row.ap
-            # post-hoc probability calibration over the same labeled
-            # pairs: fit isotonic + Platt on the <= n_bins sufficient
-            # statistic and report ECE before/after, so the score column
-            # is usable as a match PROBABILITY (review routing, expected
-            # error budgets), not just a thresholdable rank
-            from record_linkage_spark.operators.calibration import (
-                apply_isotonic,
-                expected_calibration_error,
-                isotonic_calibrate,
-                platt_calibrate,
-                reliability_report,
-            )
-
-            ranked_ck = ranked.localCheckpoint()
-            cal_map = isotonic_calibrate(ranked_ck, n_bins=50)
-            calibrated = apply_isotonic(ranked_ck, cal_map, n_bins=50)
-            ece_raw = expected_calibration_error(
-                reliability_report(ranked_ck, "score", "label")
-            ).first()
-            ece_iso = expected_calibration_error(
-                reliability_report(calibrated, "p_cal", "label")
-            ).first()
-            platt_a, platt_b = platt_calibrate(ranked_ck)
-            calibration = {
-                "ece_raw": round(float(ece_raw.ece), 6) if ece_raw.ece is not None else None,
-                "ece_isotonic": round(float(ece_iso.ece), 6) if ece_iso.ece is not None else None,
-                "platt_a": round(platt_a, 6),
-                "platt_b": round(platt_b, 6),
-                "n_bins": 50,
-            }
-        else:
-            calibration = None
-        # transcript QA: the structural checks that justify trusting
-        # turn_idx as the rollup's stable turn order, plus the
-        # agent-log pathologies (stuck loops, cross-conv boilerplate)
-        # — corpus-level counts only, three bounded aggregates
-        from record_linkage_spark.operators.agent_analytics import (
-            boilerplate_turns,
-            loop_runs,
-        )
-        from record_linkage_spark.operators.transcript_checks import (
-            transcript_integrity,
-        )
-
-        ti = transcript_integrity(transcripts).agg(
-            F.count("*").cast("long").alias("n_convs"),
-            F.sum(F.when(F.col("is_clean"), 1).otherwise(0))
-            .cast("long")
-            .alias("n_clean"),
-            F.sum("n_dup_idx").cast("long").alias("dup_idx_turns"),
-            F.sum("n_gaps").cast("long").alias("gap_slots"),
-            F.sum("n_empty").cast("long").alias("empty_turns"),
-            F.sum("n_role_repeats").cast("long").alias("role_repeat_turns"),
-            F.sum("n_ts_regress").cast("long").alias("ts_regress_turns"),
-        ).first()
-        lo = loop_runs(transcripts).agg(
-            F.sum(F.when(F.col("n_loop_runs") > 0, 1).otherwise(0))
-            .cast("long")
-            .alias("looping_convs"),
-            F.sum("n_loop_turns").cast("long").alias("loop_turns"),
-            F.max("max_run_len").cast("long").alias("max_run_len"),
-        ).first()
-        bp = boilerplate_turns(
-            transcripts, min_convs=self.qa_boilerplate_min_convs
-        ).agg(
-            F.count("*").cast("long").alias("texts"),
-            F.coalesce(F.sum("n_turns"), F.lit(0)).cast("long").alias("turns"),
-        ).first()
-        transcript_qa = {
-            "n_convs": int(ti.n_convs or 0),
-            "n_clean": int(ti.n_clean or 0),
-            "dup_idx_turns": int(ti.dup_idx_turns or 0),
-            "gap_slots": int(ti.gap_slots or 0),
-            "empty_turns": int(ti.empty_turns or 0),
-            "role_repeat_turns": int(ti.role_repeat_turns or 0),
-            "ts_regress_turns": int(ti.ts_regress_turns or 0),
-            "looping_convs": int(lo.looping_convs or 0),
-            "loop_turns": int(lo.loop_turns or 0),
-            "max_run_len": int(lo.max_run_len or 0),
-            "boilerplate_texts": int(bp.texts or 0),
-            "boilerplate_turns": int(bp.turns or 0),
-            "boilerplate_min_convs": self.qa_boilerplate_min_convs,
-        }
         self.report = {
             "strategy": self.strategy,
-            "clusterer": self.clusterer,
             "blocking": bm,
             "global": gm,
             "auc_labeled_pairs": auc_val,
             "ap_labeled_pairs": ap_val,
-            "calibration": calibration,
-            "release_gate": release_gate,
             "bcubed": bc,
             "pair_counting": pc,
             "v_measure": vm,
             "repair": repair,
-            "transcript_qa": transcript_qa,
-            "collective_rounds": self._collective_rounds,
             "threshold": self.model.threshold if self.model else None,
             "n_candidates": cands.count(),
             "n_clusters": clusters.select("entity_id").distinct().count(),
@@ -601,44 +364,6 @@ def main() -> None:
     ap.add_argument("--strategy", default="B1")
     ap.add_argument("--no-resume", action="store_true")
     ap.add_argument(
-        "--one-to-one",
-        action="store_true",
-        help="constrain matches to 1:1 before clustering (greedy "
-        "locally-dominant matching on score)",
-    )
-    ap.add_argument(
-        "--clusterer",
-        default="cc",
-        choices=["cc", "pivot", "star", "hac", "collective"],
-        help="transitive closure (cc, default), pivot correlation "
-        "clustering (noise-robust, radius-1 clusters), star (evidence-"
-        "anchored), hac (score-aware average-linkage agglomeration "
-        "cut at the tuned threshold), or collective (relational-"
-        "evidence rounds over tool-sequence co-occurrence; "
-        "Bhattacharya-Getoor)",
-    )
-    ap.add_argument(
-        "--collective-alpha",
-        type=float,
-        default=0.6,
-        help="collective clusterer only: weight of the attribute score "
-        "vs neighborhood Jaccard (1.0 degenerates to cc)",
-    )
-    ap.add_argument(
-        "--release-qi",
-        default=None,
-        metavar="COL[,COL...]",
-        help="audit the golden table for k-anonymity over these quasi-"
-        "identifier columns and report the release gate (k_min, "
-        "suppression cost at --release-k)",
-    )
-    ap.add_argument(
-        "--release-k",
-        type=int,
-        default=5,
-        help="anonymity floor for the --release-qi gate (default 5)",
-    )
-    ap.add_argument(
         "--compare",
         action="store_true",
         help="after the pipeline, emit the (strategy x model) comparison "
@@ -670,15 +395,6 @@ def main() -> None:
         n_entities=args.entities,
         dup_rate=args.dup_rate,
         strategy=args.strategy,
-        one_to_one=args.one_to_one,
-        clusterer=args.clusterer,
-        collective_alpha=args.collective_alpha,
-        release_qi=tuple(
-            c.strip() for c in args.release_qi.split(",") if c.strip()
-        )
-        if args.release_qi
-        else (),
-        release_k=args.release_k,
     )
     report = pipe.run(resume=not args.no_resume)
     if args.compare:

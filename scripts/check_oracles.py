@@ -3,6 +3,9 @@ entry on Spark and its oracle_sql() twin on DuckDB over the same parquet
 tables, compare row count + column names + order-insensitive values.
 
 Usage: python scripts/check_oracles.py [sf_dir] [query ...]
+
+Naming a query that is not a ``queries()`` entry exits 1 before Spark
+starts.
 """
 
 from __future__ import annotations
@@ -43,6 +46,10 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
 def main() -> None:
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
+    qs = entrymod.queries()
+    unknown = sorted(only - qs.keys())
+    if unknown:
+        sys.exit(f"unknown entries: {', '.join(unknown)}")
     spark = get_spark("oracle_check")
     con = duckdb.connect()
     for t in TABLES:
@@ -50,7 +57,6 @@ def main() -> None:
             f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'"
         )
 
-    qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = []
     for name, fn in qs.items():

@@ -1,13 +1,13 @@
 """ANN (vector-similarity) blocking: vector build, recall vs brute
-force, pipeline-strategy dispatch, and plan shapes."""
+force, the strategy boundary, and plan shapes."""
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from record_linkage_spark.operators.ann_blocking import (
     ann_candidate_pairs,
-    ann_pair_filter,
     brute_force_cosine_pairs,
     hashed_text_vectors,
 )
@@ -79,56 +79,15 @@ def test_ann_candidates_subset_of_brute_with_recall(spark):
     assert len(ann) / len(brute) >= 0.8  # banded-LSH recall floor
 
 
-def test_ann_pair_filter_matches_generator_semantics(spark):
-    """Filter form over hydrated GT pairs == cosine>=tau membership."""
-    profiles = _profiles(spark, n_entities=80)
-    texts = profiles.select(
-        "conv_id",
-        F.concat_ws(
-            " ",
-            F.coalesce("first_text_norm", F.lit("")),
-            F.coalesce("last_text_norm", F.lit("")),
-        ).alias("text"),
-    )
-    brute = brute_force_cosine_pairs(texts, id_col="conv_id", cosine_threshold=0.8)
-    # hydrate a mixed pair set: all brute pairs + some non-pairs
-    ids = [r.conv_id for r in profiles.select("conv_id").orderBy("conv_id").limit(30).collect()]
-    some = spark.createDataFrame(
-        [(a, b) for a in ids[:10] for b in ids[10:20]], "id_A string, id_B string"
-    )
-    cand = brute.select("id_A", "id_B").unionByName(some).dropDuplicates()
-    p = profiles.select("conv_id", "first_text_norm", "last_text_norm")
-    hyd = (
-        cand.join(
-            p.select(
-                F.col("conv_id").alias("id_A"),
-                F.col("first_text_norm").alias("first_text_norm_A"),
-                F.col("last_text_norm").alias("last_text_norm_A"),
-            ),
-            "id_A",
-        ).join(
-            p.select(
-                F.col("conv_id").alias("id_B"),
-                F.col("first_text_norm").alias("first_text_norm_B"),
-                F.col("last_text_norm").alias("last_text_norm_B"),
-            ),
-            "id_B",
-        )
-    )
-    kept = {
-        (r.id_A, r.id_B) for r in ann_pair_filter(hyd).select("id_A", "id_B").collect()
-    }
-    expected = {(r.id_A, r.id_B) for r in brute.collect()} & {
-        (r.id_A, r.id_B) for r in cand.collect()
-    }
-    assert kept == expected
-
-
 def test_strategy_dispatch_and_plan(spark):
     from record_linkage_spark.operators.blocking import candidate_pairs
 
     profiles = _profiles(spark, n_entities=60)
-    df = candidate_pairs(profiles, "ANN")
+    # ANN has its own entry point; the key-cascade dispatcher rejects it
+    # like any other unknown strategy
+    with pytest.raises(KeyError):
+        candidate_pairs(profiles, "ANN")
+    df = ann_candidate_pairs(profiles)
     assert df.columns == ["id_A", "id_B", "block_key", "strategy"]
     plan = df._jdf.queryExecution().executedPlan().toString()
     # LSH bucket join, never a cross product; vector build is pure

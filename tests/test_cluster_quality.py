@@ -351,40 +351,6 @@ def test_correlation_clustering_empty(spark):
     assert correlation_clustering(df).count() == 0
 
 
-def test_pipeline_pivot_clusterer_and_repair_report(spark, tmp_path):
-    """--clusterer pivot swaps transitive closure for correlation
-    clustering; the report carries the pair-counting family and the
-    cluster-repair summary; every non-singleton member is adjacent to
-    its pivot (radius-1)."""
-    from record_linkage_spark.plans.pipeline import LinkagePipeline
-
-    pipe = LinkagePipeline(
-        spark, str(tmp_path / "wh"), n_entities=60, dup_rate=1.8,
-        clusterer="pivot",
-    )
-    r = pipe.run(resume=True)
-    assert r["clusterer"] == "pivot"
-    assert r["pair_counting"]["adjusted_rand"] > 0.8
-    assert r["pair_counting"]["pairwise_f1"] > 0.8
-    assert set(r["repair"]) == {
-        "entities_with_conflicts", "conflict_pairs",
-        "unscored_within_pairs", "merge_candidate_entity_pairs",
-    }
-    edges = spark.read.parquet(str(tmp_path / "wh" / "match_edges"))
-    nbrs: dict[str, set] = {}
-    for e in edges.collect():
-        nbrs.setdefault(e.src, set()).add(e.dst)
-        nbrs.setdefault(e.dst, set()).add(e.src)
-    clusters = spark.read.parquet(str(tmp_path / "wh" / "clusters"))
-    for row in clusters.collect():
-        assert (
-            row.conv_id == row.entity_id
-            or row.conv_id in nbrs.get(row.entity_id, set())
-        )
-    with pytest.raises(KeyError):
-        LinkagePipeline(spark, str(tmp_path / "x"), clusterer="NOPE")
-
-
 def _star_order(spark, edges: list[tuple], seed: int) -> dict:
     """Rank key (degree desc, hash, id) — the star clusterer's static
     total order."""

@@ -291,40 +291,3 @@ def test_transcript_tool_relations_ngram_truth_table(spark):
         for r in transcript_tool_relations(t, n=1).collect()
     }
     assert ("c2", "x") in got1 and ("c1", "a") in got1
-
-
-def test_pipeline_collective_clusterer_end_to_end(spark, tmp_path):
-    """--clusterer collective runs the full pipeline: bootstrap merges
-    attribute-certain pairs (never demotes), relational rounds are
-    recorded in the report, every conversation keeps exactly one
-    entity, and quality stays high on the synthetic corpus."""
-    from record_linkage_spark.plans.pipeline import LinkagePipeline
-
-    pipe = LinkagePipeline(
-        spark, str(tmp_path / "wh"), n_entities=60, dup_rate=1.8,
-        clusterer="collective",
-    )
-    r = pipe.run(resume=True)
-    assert r["clusterer"] == "collective"
-    rounds = r["collective_rounds"]
-    assert rounds and rounds[0]["round"] == 0
-    assert all(rd["new_merges"] >= 0 for rd in rounds)
-    assert r["global"]["f1"] > 0.9
-    assert r["pair_counting"]["adjusted_rand"] > 0.8
-    clusters = spark.read.parquet(str(tmp_path / "wh" / "clusters"))
-    assert clusters.groupBy("conv_id").count().filter("count > 1").count() == 0
-    # the bootstrap guarantee: every pred==1 pair is intra-entity
-    scored = spark.read.parquet(str(tmp_path / "wh" / "scored_pairs"))
-    a = clusters.withColumnRenamed("conv_id", "id_A").withColumnRenamed(
-        "entity_id", "e_a"
-    )
-    b = clusters.withColumnRenamed("conv_id", "id_B").withColumnRenamed(
-        "entity_id", "e_b"
-    )
-    split = (
-        scored.filter(F.col("pred") == 1)
-        .join(a, "id_A")
-        .join(b, "id_B")
-        .filter(F.col("e_a") != F.col("e_b"))
-    )
-    assert split.count() == 0

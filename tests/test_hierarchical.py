@@ -13,7 +13,6 @@ The distributed result is pinned against:
 import itertools
 import random
 
-import pytest
 from pyspark.sql import functions as F
 
 from record_linkage_spark.operators.clustering import (
@@ -158,27 +157,6 @@ def test_oversized_component_falls_back_to_transitive(spark):
     )
     # 4-member component > cap: the whole component takes the CC answer
     assert got == {"a": "a", "b": "a", "c": "a", "d": "a"}
-
-
-def test_pipeline_hac_clusterer(spark, tmp_path):
-    """--clusterer hac swaps transitive closure for score-aware
-    average-linkage agglomeration cut at the tuned threshold; quality on
-    the synthetic corpus stays high and the report records the choice."""
-    from record_linkage_spark.plans.pipeline import LinkagePipeline
-
-    pipe = LinkagePipeline(
-        spark, str(tmp_path / "wh"), n_entities=60, dup_rate=1.8,
-        clusterer="hac",
-    )
-    r = pipe.run(resume=True)
-    assert r["clusterer"] == "hac"
-    assert r["pair_counting"]["adjusted_rand"] > 0.8
-    assert r["global"]["f1"] > 0.9
-    # every clustered record landed in exactly one entity
-    clusters = spark.read.parquet(str(tmp_path / "wh" / "clusters"))
-    assert clusters.groupBy("conv_id").count().filter("count > 1").count() == 0
-    with pytest.raises(KeyError):
-        LinkagePipeline(spark, str(tmp_path / "x"), clusterer="BAD")
 
 
 def test_kernel_tiebreak_is_canonical():

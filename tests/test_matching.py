@@ -72,21 +72,3 @@ def test_deterministic_across_parallelism(spark):
 def test_empty_input(spark):
     df = spark.createDataFrame([], "id_A bigint, id_B bigint, score double")
     assert one_to_one_matching(df).collect() == []
-
-
-def test_pipeline_one_to_one_flag(spark, tmp_path):
-    """--one-to-one constrains match edges: every conv appears in at most
-    one edge, and the pipeline still reports sane quality."""
-    from record_linkage_spark.plans.pipeline import LinkagePipeline
-
-    pipe = LinkagePipeline(
-        spark, str(tmp_path / "wh"), n_entities=60, dup_rate=1.8,
-        one_to_one=True,
-    )
-    r = pipe.run(resume=True)
-    edges = spark.read.parquet(str(tmp_path / "wh" / "match_edges"))
-    nodes = [r_.src for r_ in edges.collect()] + [
-        r_.dst for r_ in edges.collect()
-    ]
-    assert len(nodes) == len(set(nodes))
-    assert r["global"]["precision"] >= 0.9
